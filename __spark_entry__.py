@@ -18,12 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from turbine_maintenance_etl_spark.queries import REGISTRY, ordered_registry  # noqa: E402
-import turbine_maintenance_etl_spark.queries_llm  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_ext  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: E402,F401  (registers entries)
+from turbine_maintenance_etl_spark.queries import load_registry, ordered_registry  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def entry(spark: SparkSession) -> DataFrame:

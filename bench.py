@@ -21,12 +21,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from turbine_maintenance_etl_spark import get_spark
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import load_registry
+
+REGISTRY = load_registry()
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -177,41 +174,51 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+def time_entry(spark, fn, sf_dir: str, max_runs: int = 7) -> list[float]:
+    """Sorted wall times of ``fn(spark, sf_dir)`` + noop materialization:
+    the one timing protocol every measurement in the repo shares (the
+    caller warms first).
+
+    MEDIAN protocol: three genuinely-cold runs (round-4 verdict #5:
+    best-of-N made the ±10-14% shared-VM noise band indistinguishable
+    from real regressions), clearCache() before each so operator-
+    internal persists never carry between runs (no cache-assisted fast
+    repeats). If the three runs still disagree badly (max > 1.5x min)
+    the host was noisy — take up to ``max_runs`` in total before the
+    median, so the reported number is steady-state cold execution.
+    The median is ``runs[len(runs) // 2]``; min/max ride along so a
+    verdict can tell noise from regression."""
+    runs: list[float] = []
+    for _ in range(max_runs):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        _materialize(fn(spark, sf_dir))
+        runs.append(time.perf_counter() - t0)
+        if len(runs) >= 3 and max(runs) <= 1.5 * min(runs):
+            break
+    runs.sort()
+    return runs
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark(app_name="bench")
     # warm-up: run every query shape once on the miniature SF so timed
     # runs measure execution, not JVM codegen / file-listing warm-up
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
+    if os.path.isdir(WARM_DIR) and WARM_DIR != sf_dir:
         for name in BENCH_QUERIES:
-            _materialize(REGISTRY[name].fn(spark, warm_dir))
-    # MEDIAN of three genuinely-cold runs per query (round-4 verdict #5:
-    # best-of-N made the ±10-14% shared-VM noise band indistinguishable
-    # from real regressions). clearCache() before each run so
-    # operator-internal persists never carry between runs (no
-    # cache-assisted fast repeats). If the three runs still disagree
-    # badly (max > 1.5x min) the host was noisy — take up to four extra
-    # runs before the median, so the reported number is steady-state
-    # cold execution. Per-query min/max ride along in queries_minmax so
-    # the next round's verdict can tell noise from regression.
+            _materialize(REGISTRY[name].fn(spark, WARM_DIR))
     timings: dict[str, float] = {}
     minmax: dict[str, list[float]] = {}
     for name in BENCH_QUERIES:
         fn = REGISTRY[name].fn
         # adjacent target-SF warm run (see the round-9 note above)
         _materialize(fn(spark, sf_dir))
-        runs: list[float] = []
-        for i in range(7):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            _materialize(df)
-            runs.append(time.perf_counter() - t0)
-            if len(runs) >= 3 and max(runs) <= 1.5 * min(runs):
-                break
-        runs.sort()
+        runs = time_entry(spark, fn, sf_dir)
         timings[name] = round(runs[len(runs) // 2], 4)
         minmax[name] = [round(runs[0], 4), round(runs[-1], 4)]
     total = round(sum(timings.values()), 4)

@@ -33,24 +33,16 @@ BroadcastExchange (moves the SMALL side only — not a scaling concern).
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from turbine_maintenance_etl_spark import get_spark
-    from turbine_maintenance_etl_spark.queries import REGISTRY
-    import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
     from bench import BENCH_QUERIES
+    from scripts.ledger import REGISTRY, explain_string
+    from turbine_maintenance_etl_spark import get_spark
 
     spark = get_spark(app_name="gen-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
     for name in BENCH_QUERIES:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = explain_string(REGISTRY[name].fn(spark, sf_dir))
         shuffle = len(re.findall(r"\(\d+\) Exchange", plan))
         bcast = len(re.findall(r"\(\d+\) BroadcastExchange", plan))
         bhj = len(re.findall(r"\(\d+\) BroadcastHashJoin", plan))

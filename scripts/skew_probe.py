@@ -14,7 +14,8 @@ corpora and times the window/dedup core at 1x and 8x:
 
 Usage: python scripts/skew_probe.py [--sf-dir D] [--reps N]
 Prints markdown rows (paste into SCALING.md's skew-probe section).
-Timing is the same noop-sink materialize as scripts/scale_probe.py.
+Timing is ``scripts/ledger.py scale``'s: warm-up, then bench.py's median
+loop over noop-sink materializations.
 """
 
 from __future__ import annotations
@@ -88,8 +89,8 @@ def build_skewed_documents(spark, sf_dir: str, out_dir: str, reps: int) -> None:
 
 
 # one timing protocol for every probe — a local copy would silently
-# diverge from scale_probe's published numbers (r10 review)
-from scripts.scale_probe import time_query  # noqa: E402
+# diverge from the ledger's published numbers
+from scripts.ledger import REGISTRY, measure, median  # noqa: E402
 
 
 def main() -> None:
@@ -102,12 +103,6 @@ def main() -> None:
         reps = int(args[args.index("--reps") + 1])
 
     from turbine_maintenance_etl_spark import get_spark
-    from turbine_maintenance_etl_spark.queries import REGISTRY
-    import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
-    import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
 
     spark = get_spark(app_name="skew-probe")
     base1 = "/tmp/skewprobe/x1"
@@ -122,8 +117,8 @@ def main() -> None:
     print("|---|---|---|---|")
     for name in targets:
         fn = REGISTRY[name].fn
-        t1 = time_query(spark, fn, base1)
-        t8 = time_query(spark, fn, base8)
+        t1 = median(measure(spark, fn, base1))
+        t8 = median(measure(spark, fn, base8))
         print(f"| {name} | {t1:.2f}s | {t8:.2f}s | {t8 / t1:.1f} |", flush=True)
 
 

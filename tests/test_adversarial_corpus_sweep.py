@@ -29,12 +29,9 @@ import pytest
 
 from tests.conftest import SF_DIR
 from tests.oracle_harness import TABLES, compare, duck_connection
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import load_registry
+
+REGISTRY = load_registry()
 
 _DIRTY = re.compile(r"\b(documents|events|embeddings)\b")
 CANDIDATES = sorted(

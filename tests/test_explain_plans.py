@@ -11,12 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import load_registry
+
+REGISTRY = load_registry()
 
 
 def plan_of(df, mode: str = "formatted") -> str:

@@ -105,3 +105,34 @@ def test_truncated_single_segment_still_raises(monkeypatch):
     monkeypatch.setattr(J._BitReader, "_WINDOW_BYTES", 4)
     with pytest.raises(ValueError):
         J.decode_jpeg_pixels(blob[: len(blob) // 2])
+
+
+def test_read_bit_stops_at_restart_segment_end():
+    """The whole scan is destuffed at once, so the window past a
+    segment's last bit already holds the NEXT segment's bits: read_bit
+    must end the segment there, not return the first bit after RST0."""
+    reader = J._BitReader(b"\xab\xff\xd0\xcd\xff\xd9", 0)
+    assert [reader.read_bit() for _ in range(8)] == [1, 0, 1, 0, 1, 0, 1, 1]
+    with pytest.raises(J._SegmentEnd):
+        reader.read_bit()
+    assert reader.align_to_marker() == 0xD0
+    assert reader.read_bits(8) == 0xCD
+
+
+@pytest.mark.parametrize("quality", [75, 95])
+def test_truncated_restart_segments_raise(quality):
+    """Cut the last entropy byte of every restart segment of a
+    progressive stream (DC/AC first and refinement scans): each cut
+    segment runs out of bits mid-block, so decode must raise, never
+    borrow the following segment's bits and return pixels. The two
+    qualities between them end segments inside every inlined
+    correction-bit read of _ac_refine_prog and in read_bit."""
+    px = _noise_image(24, 24, seed=5)
+    blob = J.encode_jpeg_progressive(px, quality=quality, restart_interval=1)
+    rst = [j for j in range(len(blob) - 1)
+           if blob[j] == 0xFF and 0xD0 <= blob[j + 1] <= 0xD7]
+    assert len(rst) > 50
+    for r in rst:
+        cut = 2 if blob[r - 2 : r] == b"\xff\x00" else 1  # keep stuffing whole
+        with pytest.raises(ValueError):
+            J.decode_jpeg_pixels(blob[: r - cut] + blob[r:])

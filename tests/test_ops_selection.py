@@ -74,6 +74,16 @@ def test_multi_round_refinement_path(spark):
            pcts := [0.5], collect_threshold=1, max_rounds=64)
 
 
+def test_max_rounds_zero_fallback_bit_identical(spark):
+    """max_rounds=0 sends every rank through the fallback. These sizes
+    need ranks r whose p = r/(n-1) does not round-trip in doubles
+    (n=300: r=224, 225; n=1000: r=250, 500), where a native percentile
+    at p interpolates next to the order statistic instead of on it."""
+    rng = random.Random(23)
+    for n in (300, 1000):
+        _check(spark, [rng.uniform(-1e3, 1e3) for _ in range(n)], max_rounds=0)
+
+
 def test_empty_and_null_only(spark):
     df = spark.createDataFrame([(None,), (None,)], "v double")
     assert exact_percentiles(df, "v", [0.5]) == [None]

@@ -7,12 +7,9 @@ import pytest
 
 from tests.conftest import SF_DIR
 from tests.oracle_harness import compare, duck_connection
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import load_registry
+
+REGISTRY = load_registry()
 
 
 @pytest.fixture(scope="module")

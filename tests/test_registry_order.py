@@ -15,14 +15,11 @@ import re
 from turbine_maintenance_etl_spark.queries import (
     GRADE_WINDOW,
     PRIORITY_ORDER,
-    REGISTRY,
+    load_registry,
     ordered_registry,
 )
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: E402,F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401  (registers entries)
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+
+REGISTRY = load_registry()
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

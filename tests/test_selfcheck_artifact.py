@@ -13,12 +13,9 @@ import glob
 import json
 import os
 
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import load_registry
+
+REGISTRY = load_registry()
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

@@ -7,12 +7,9 @@ from __future__ import annotations
 
 import pytest
 
-from turbine_maintenance_etl_spark.queries import REGISTRY
-import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
-import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
-import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
-import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
-import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import load_registry
+
+REGISTRY = load_registry()
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -551,11 +551,6 @@ def simhash(
     )
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between two packed simhash bigints."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def resolve_duplicate_clusters(
     pairs: DataFrame,
     max_iter: int = 10,

@@ -316,6 +316,10 @@ class _BitReader:
         if p >= len(self.bits):
             self._advance()  # raises at segment end; else p < len(bits)
             p = self.p
+        if self._base + p >= self._nbits:
+            # the window may already hold the NEXT segment's bits (the
+            # scan is destuffed whole): stop at this segment's budget
+            self._end()
         self.p = p + 1
         return (self.bits[p] >> 15) & 1
 
@@ -1102,6 +1106,9 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
                     reader._advance()
                     win, p, wlen = reader.bits, reader.p, len(reader.bits)
                     base = reader._base
+                if base + p >= nbits:
+                    reader.p = p
+                    reader._end()
                 val = p1 if win[p] >> 15 else m1
                 p += 1
             else:
@@ -1119,6 +1126,9 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
                         reader._advance()
                         win, p, wlen = reader.bits, reader.p, len(reader.bits)
                         base = reader._base
+                    if base + p >= nbits:
+                        reader.p = p
+                        reader._end()
                     hit = win[p] >> 15
                     p += 1
                     if hit and (bk & p1) == 0:
@@ -1143,6 +1153,9 @@ def _ac_refine_prog(reader, ac_t, blk, ss, se, al, state) -> None:
                     reader._advance()
                     win, p, wlen = reader.bits, reader.p, len(reader.bits)
                     base = reader._base
+                if base + p >= nbits:
+                    reader.p = p
+                    reader._end()
                 hit = win[p] >> 15
                 p += 1
                 if hit and (bk & p1) == 0:

@@ -30,37 +30,6 @@ from turbine_maintenance_etl_spark.llm.text import (  # noqa: F401 (bind_once,
 )
 
 
-def bigrams_expr(toks: Column) -> Column:
-    """Word bigrams (with multiplicity) of a token array:
-    zip(tokens[0:n-1], tokens[1:n]) — pure codegen, no explode."""
-    n = F.greatest(F.size(toks) - 1, F.lit(0))
-    left = F.slice(toks, 1, n)
-    right = F.slice(toks, 2, n)
-    return F.zip_with(left, right, lambda a, b: F.concat_ws(" ", a, b))
-
-
-def top_run_count(sorted_arr: Column) -> Column:
-    """Highest multiplicity of any element in a SORTED array, via a
-    single aggregate pass tracking (prev, current run, best run). This
-    is the zero-shuffle alternative to explode→groupBy→max for per-row
-    'most frequent element' — linear in the array, no join back."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("bigint").alias("run"),
-        F.lit(0).cast("bigint").alias("best"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(
-            F.lit(1).cast("bigint")
-        )
-        return F.struct(
-            x.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
-        )
-
-    return F.aggregate(sorted_arr, init, step, lambda acc: acc["best"])
-
-
 def repetition_signals(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -27,11 +27,16 @@ exactly — the rank bookkeeping is exact regardless of how floating
 binning skews bin sizes. Convergence: each round's interval is the
 observed min/max of a strict subset whenever the histogram separates
 anything; pathological clusters (many distinct values within ulps) are
-cut off by ``max_rounds`` and fall back to Spark's native percentile
-over the FILTERED interval (<= the previous round's row count, so the
-fallback is never worse than the single-buffer status quo). NaN inputs
-(which Spark orders greatest) also take the native fallback rather
-than poisoning the arithmetic of the histogram map.
+cut off by ``max_rounds`` and fall back to a distributed sort of the
+FILTERED interval (<= the previous round's row count) that fetches the
+rank's row by offset. NaN inputs (which Spark orders greatest) take
+Spark's native percentile rather than poisoning the arithmetic of the
+histogram map.
+
+Callers' DataFrames become partly EAGER: ``exact_percentiles`` runs its
+passes and collects when it is called, and returns plain floats, so a
+query builder that uses it (e.g. ``a12_a14_quantile_corr``) executes
+those jobs at construction time and embeds the results as literals.
 
 Driver payload per round: <= (#distinct intervals) x bins count rows —
 O(KB); the final collect is <= collect_threshold doubles per rank.
@@ -144,17 +149,21 @@ def _order_stats(
             else:  # bookkeeping can't miss — counts sum to cnt
                 raise AssertionError("rank offset exceeded interval count")
     # pathological residue (max_rounds hit: e.g. huge clusters of
-    # distinct values within ulps): native percentile over the SHRUNKEN
-    # slice — bounded by the last round's interval count, so never
-    # worse than the single-buffer status quo on the whole column.
-    # p = off/(cnt-1) makes (cnt-1)*p integral, so the interpolation
-    # lands exactly on the off-th order statistic of the slice.
-    for r, (lo, hi, off, cnt) in state.items():
-        p = 0.0 if cnt <= 1 else off / (cnt - 1)
-        row = base.filter((F.col("_v") >= lo) & (F.col("_v") <= hi)).agg(
-            F.percentile("_v", F.lit(float(p))).alias("_x")
-        ).collect()[0]
-        resolved[r] = float(row["_x"])
+    # distinct values within ulps): fetch the off-th order statistic of
+    # the SHRUNKEN slice directly — a distributed sort of at most the
+    # last round's interval count, one row collected. (A native
+    # percentile at p = off/(cnt-1) is not exact: that p does not
+    # round-trip through doubles, so its interpolation can land between
+    # two neighbouring order statistics.)
+    for r, (lo, hi, off, _cnt) in state.items():
+        row = (
+            base.filter((F.col("_v") >= lo) & (F.col("_v") <= hi))
+            .orderBy("_v")
+            .offset(off)
+            .limit(1)
+            .collect()[0]
+        )
+        resolved[r] = float(row["_v"])
     return resolved
 
 

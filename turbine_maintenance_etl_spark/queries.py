@@ -291,10 +291,23 @@ PRIORITY_ORDER: list[str] = [
 ]
 
 
+def load_registry() -> dict[str, Query]:
+    """Import every query module (each registers its entries on import)
+    and return the now-complete REGISTRY. Idempotent: later calls only
+    hit the import cache."""
+    import turbine_maintenance_etl_spark.queries_llm  # noqa: F401
+    import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
+    import turbine_maintenance_etl_spark.queries_sources  # noqa: F401
+    import turbine_maintenance_etl_spark.queries_suites  # noqa: F401
+    import turbine_maintenance_etl_spark.queries_window_ext  # noqa: F401
+
+    return REGISTRY
+
+
 def ordered_registry() -> dict[str, Query]:
     """REGISTRY in PRIORITY_ORDER, asserting the two never drift apart.
 
-    Callers must import all query modules first (``__spark_entry__`` and
+    Callers must call ``load_registry()`` first (``__spark_entry__`` and
     the tests do); tests pin that PRIORITY_ORDER covers the registry
     exactly, so a new entry without an ordering decision fails fast."""
     missing = [n for n in PRIORITY_ORDER if n not in REGISTRY]
