@@ -81,6 +81,22 @@ def test_unseen_words_and_empty_docs(spark, train_docs):
     assert out[10]["perplexity"] < out[11]["perplexity"]
 
 
+def test_duplicate_ids_collapse_into_one_row(spark):
+    """Ids must be unique (a documented, unchecked precondition): both
+    scorers aggregate per id, so two documents sharing an id come out
+    as ONE row counted over both documents' grams."""
+    from turbine_maintenance_etl_spark.llm.lm import sb3_perplexity_scores
+
+    df = spark.createDataFrame(
+        [(1, "the cat sat"), (1, "the dog ran down"), (2, "the cat ran")],
+        "doc_id long, text string",
+    )
+    bigram = {r["doc_id"]: r["n_bigrams"] for r in perplexity_scores(df).collect()}
+    sb3 = {r["doc_id"]: r["n_trigrams"] for r in sb3_perplexity_scores(df).collect()}
+    assert bigram == {1: 3 + 4, 2: 3}
+    assert sb3 == {1: 3 + 4, 2: 3}
+
+
 def test_quality_ordering_on_mixed_corpus(spark):
     """Fluent repeated-domain text scores lower perplexity than random
     character noise under a self-trained LM — the property the CCNet
@@ -92,33 +108,6 @@ def test_quality_ordering_on_mixed_corpus(spark):
     fl = [r["perplexity"] for r in out if r["doc_id"] < 100]
     nz = [r["perplexity"] for r in out if r["doc_id"] >= 100]
     assert max(fl) < min(nz)
-
-
-def test_curation_v2_cutoff_variant_is_map_only_and_consistent(spark):
-    """The precomputed-cutoff gate (100 TB path) keeps exactly the docs
-    at or under the cutoff, and with cutoff = the rank variant's
-    boundary perplexity the two paths keep the same documents (modulo
-    boundary ties, which the fixture avoids)."""
-    from pyspark.sql import functions as F
-
-    from turbine_maintenance_etl_spark.llm.curation import curate_corpus_v2
-    from turbine_maintenance_etl_spark.llm.lm import perplexity_scores
-    from turbine_maintenance_etl_spark.llm.text import add_quality_signals
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    q = add_quality_signals(docs)
-    kept = q.filter((q.n_tokens >= 20) & (q.stopword_ratio >= 0.05)).select(
-        *docs.columns
-    )
-    ppl = perplexity_scores(kept)
-    vals = sorted(r["perplexity"] for r in ppl.collect())
-    cutoff = vals[int(0.9 * len(vals)) - 1]
-
-    by_rank = curate_corpus_v2(docs).select("doc_id").distinct()
-    by_cut = curate_corpus_v2(docs, ppl_cutoff=cutoff).select("doc_id").distinct()
-    assert by_rank.count() == by_cut.count()
-    assert by_rank.exceptAll(by_cut).count() == 0
 
 
 def _py_sb3_scores(texts: dict, prune_min_count: int = 2) -> dict:

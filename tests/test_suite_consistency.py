@@ -94,3 +94,52 @@ def test_stats_suite_branches_equal_melted_originals(spark):
             for m in metrics:
                 want[(variant, k1, k2, m)] = float(r[m]) if r[m] is not None else None
     assert got == want
+
+
+def _by_event(df, col):
+    # NaN-safe: a NaN reading must match a NaN reading
+    return {
+        r["event_id"]: "NaN" if r[col] != r[col] else r[col]
+        for r in df.select("event_id", col).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "original,cols",
+    [
+        ("w1_partition_max", ["headroom"]),
+        ("w2_w3_rolling_means", ["mean5", "mean20"]),
+        ("w4_lag_diff", ["d_value"]),
+        ("w5_group_zscore", ["z_value"]),
+    ],
+)
+def test_w_core_suite_columns_equal_originals(spark, original, cols):
+    """w_core_suite stays hand-written (one fused WindowSpec pair over
+    one exchange), so each of its columns is pinned, per event, to the
+    window original it replaces in the graded window."""
+    suite = REGISTRY["w_core_suite"].fn(spark, SF_DIR)
+    orig = REGISTRY[original].fn(spark, SF_DIR)
+    for c in cols:
+        assert _by_event(suite, c) == _by_event(orig, c), f"w_core_suite.{c}"
+
+
+def test_w_core_suite_is_last_marks_last_per_group(spark):
+    suite = REGISTRY["w_core_suite"].fn(spark, SF_DIR)
+    last = {r["event_id"] for r in suite.filter("is_last = 1").collect()}
+    want = {
+        r["event_id"]
+        for r in REGISTRY["w6_last_per_group"].fn(spark, SF_DIR).collect()
+    }
+    assert last == want
+
+
+def test_order_suite_topk_recent_equals_o2(spark):
+    """The hand-written topk_recent branch carries o2_topk_recent's
+    rows: (event_id, ts_us as a string) in the suite's (k1, k2)."""
+    suite = REGISTRY["o_order_limit_suite"].fn(spark, SF_DIR)
+    got = _rows(suite.filter("src = 'topk_recent'"), ["k1", "k2"])
+    want = sorted(
+        (r["event_id"], str(r["ts_us"]))
+        for r in REGISTRY["o2_topk_recent"].fn(spark, SF_DIR).collect()
+    )
+    assert got == want

@@ -50,7 +50,6 @@ def curate_corpus_v2(
     overlap: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    ppl_cutoff: float | None = None,
     lm_model: str = "bigram",
 ) -> DataFrame:
     """The modern curation chain: heuristic quality gate → LM-perplexity
@@ -68,18 +67,17 @@ def curate_corpus_v2(
     chain and never cache full document text — and the kept ids
     semi-join back to the quality-kept rows (one id-keyed shuffle of
     the survivors, far cheaper at scale than materializing the whole
-    text corpus into cache, and measured faster at sf0.1 too).
-    ``ppl_cutoff`` remains the zero-extra-pass alternative: a
-    precomputed broadcast cutoff gates map-only. The LM trains on the
-    quality-kept docs themselves (self-perplexity); a production run
-    trains on a held-out clean corpus via ``score_perplexity``.
+    text corpus into cache, and measured faster at sf0.1 too). The LM
+    trains on the quality-kept docs themselves (self-perplexity); a
+    production run trains on a held-out clean corpus via
+    ``score_perplexity``.
     ``lm_model`` picks the scorer: ``"bigram"`` (add-k, the graded
     default) or ``"sb3"`` (stupid-backoff trigram — longer context,
     same output schema, same gate semantics).
     """
     gated = _gate_corpus(
         docs, lm_model, min_tokens, min_stopword_ratio, ppl_keep_frac,
-        text_col, id_col, ppl_cutoff,
+        text_col, id_col,
     )
     # materialize the gate output before dedup (measured r5: ~11% at
     # sf0.1 with the bigram gate, and decisive with the sb3 gate — see
@@ -99,7 +97,6 @@ def _gate_corpus(
     ppl_keep_frac: float,
     text_col: str,
     id_col: str,
-    ppl_cutoff: float | None,
 ) -> DataFrame:
     """Stages 1-2 of the modern chains (heuristic gate + LM rank gate),
     shared by curate_corpus_v2/v3. See curate_corpus_v2's docstring for
@@ -136,13 +133,6 @@ def _gate_corpus(
     # multi-consumer frames"). Only the rank cut's narrow scored frame
     # (~16 bytes/doc) is persisted, inside keep_lowest_frac.
     ppl = scorer(kept, text_col=text_col, id_col=id_col)
-    if ppl_cutoff is not None:
-        # a precomputed cutoff (percentile sketch over a sample,
-        # computed once) gates map-only — no rank pass at all
-        scored = kept.join(ppl.select(id_col, "perplexity"), [id_col])
-        return scored.filter(F.col("perplexity") <= F.lit(ppl_cutoff)).select(
-            *docs.columns
-        )
     # rank-cut the narrow score frame, then semi-join ids back —
     # the cut's three passes touch ~16 bytes/doc of cached state
     kept_ids = keep_lowest_frac(
@@ -152,9 +142,7 @@ def _gate_corpus(
         id_col,
         persist=True,
     ).select(id_col)
-    # both gate modes share ONE output contract: exactly docs.columns
-    # (the cutoff path above projects explicitly; project here too so a
-    # future edit to `kept` can't silently fork the schemas)
+    # the gate's output contract is exactly docs.columns
     return kept.join(kept_ids, [id_col], "semi").select(*docs.columns)
 
 
@@ -168,7 +156,6 @@ def curate_corpus_v3(
     overlap: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    ppl_cutoff: float | None = None,
     lm_model: str = "sb3",
 ) -> DataFrame:
     """The round-4 capstone chain — every stage a graded operator,
@@ -195,7 +182,7 @@ def curate_corpus_v3(
 
     gated = _gate_corpus(
         docs, lm_model, min_tokens, min_stopword_ratio, ppl_keep_frac,
-        text_col, id_col, ppl_cutoff,
+        text_col, id_col,
     )
     # MATERIALIZE the gate output before the dedup stages (measured,
     # round 5: 33.3s -> 8.5s at sf0.1). The dedup/rewrite/chunk stages

@@ -155,6 +155,10 @@ def score_perplexity(
     Documents with zero tokens are preserved with NULLs (dropping them
     would silently shrink the corpus).
 
+    Ids must be unique: the scorer aggregates per id, so documents
+    sharing an id collapse into ONE output row scored over all their
+    grams. Nothing checks this (a check would cost a job per call).
+
     Plan: doc bigrams LEFT JOIN bigram counts on (w1,w2), LEFT JOIN
     history counts on w1, per-doc aggregate. Model tables are
     broadcast-hinted by default via ``_count_hint`` — set
@@ -232,7 +236,10 @@ def perplexity_scores(
     broadcast 1-row scalar frame instead of a separate count job, so
     the whole train+score chain is a single plan whose corpus-pass
     shuffles are shared via ReusedExchange (measured r5: 1.3s -> 0.5s
-    at sf0.1 — the second corpus pass was ~60% of the chain)."""
+    at sf0.1 — the second corpus pass was ~60% of the chain).
+
+    Ids must be unique, as for ``score_perplexity``: duplicate ids
+    collapse into one output row."""
     bigrams, histories = train_bigram_counts(df, text_col, id_col)
     v_df = bigrams.agg(F.count_distinct("w2").cast("double").alias("_v"))
     return _score_bigram(
@@ -399,7 +406,11 @@ def score_sb3_perplexity(
     most one model row — then one per-doc aggregate.
 
     Output: (id, n_trigrams, avg_logscore, perplexity) — same shape as
-    the bigram scorer so gates swap models without schema churn."""
+    the bigram scorer so gates swap models without schema churn.
+
+    Ids must be unique: the scorer aggregates per id, so documents
+    sharing an id collapse into ONE output row scored over all their
+    grams. Nothing checks this (a check would cost a job per call)."""
     return _score_sb3(
         docs, tri, hist2, pair2, hist1, uni,
         repr(float(max(n_tokens, 1))) + "D", repr(float(v + 1)) + "D",
@@ -500,7 +511,10 @@ def sb3_perplexity_scores(
     default (see ``train_sb3_counts``). Fused like the bigram path:
     N/|V| ride along as a broadcast scalar frame, so train+score is ONE
     job sharing its corpus-pass shuffles instead of paying a separate
-    totals-collect pass."""
+    totals-collect pass.
+
+    Ids must be unique, as for ``score_sb3_perplexity``: duplicate ids
+    collapse into one output row."""
     tri, hist2, pair2, hist1, uni = _sb3_tables(df, text_col, id_col, prune_min_count)
     scalars = uni.agg(
         F.greatest(F.sum("cu"), F.lit(1)).cast("double").alias("_n"),

@@ -1,22 +1,36 @@
-"""Consolidated §2 suite entries — round-4 grading-window compaction.
+"""Consolidated suite entries: several registered originals, reshaped
+into one tagged-union graded row.
 
-The driver grades only the first ``GRADE_WINDOW`` (50) registry entries,
-and round 3's verdict flagged that every flagship LLM-pipeline operator
-sat OUTSIDE that window with builder-side verification only. These
-suites merge §2 operator families that previously spent one window slot
-each into single tagged-union graded rows (the pattern already proven by
-``s1_s2_text_scan_suite`` / ``u1_set_ops_suite`` / ``a5_a7`` /
-``a13_a15``), freeing ~18 slots for independent driver evidence on the
-extension surface (LSH variants, semantic dedup, curation chains, drift,
-SCD2, packing, …).
+Only the first ``GRADE_WINDOW`` (50) registry entries are graded. Each
+suite here spends one window slot on a whole operator family; its
+single-operator originals stay registered below the window, still
+selfchecked and still run by ``tests/test_oracle.py``.
 
-The ORIGINAL single-operator entries remain registered below the window
-— still selfchecked per round and still run by ``tests/test_oracle.py``
-— so nothing loses verification; the suites ADD a second, merged oracle
-row per family inside the graded window.
+Most branches are DERIVED from an original, never restated. A branch is
+one part ``(original entry, WHERE or None, [SQL select items])``, and
+one parts list drives both engines:
 
-Reference parity citations live on the original entries; each suite
-docstring names the §2 IDs it carries.
+* ``_parts_frame`` (Spark) calls each original's builder once, applies
+  ``.filter(where)`` and ``.selectExpr(*items)``, and ``unionByName``s
+  the parts;
+* ``_parts_sql`` (DuckDB) emits
+  ``SELECT items FROM (<original oracle>) [WHERE where]`` per part,
+  joined with ``UNION ALL``.
+
+The select items use SQL both engines accept (``CAST(x AS STRING)``,
+``ROUND``, ``COUNT``), so each column mapping is written once and an
+edit to an original reaches its suite on both sides.
+
+A branch stays hand-written in both engines only where no registered
+original emits the columns it reduces: the p3 constant probe (no
+``tag`` column), the j2 keygen checksum (needs ``n_nationkey``), the a9
+two-level aggregate (needs the customer count), the ``topk_recent``
+branch (needs ``value``) and ``w_core_suite`` (its fused builder is the
+one-exchange plan). ``dedup_graph_suite`` keeps its own builder, which
+shares one clusters frame between both branches, but reads its select
+items and its oracle from its parts list. ``a_stats_suite`` melts its
+originals with ``_melt_oracle``. ``tests/test_suite_consistency.py``
+pins every suite against its originals.
 """
 
 from __future__ import annotations
@@ -24,7 +38,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from turbine_maintenance_etl_spark.queries import _t, register
+# queries_ext registers the P1/P4/P10/P12/O1/A16 originals and imports
+# queries_llm (the sim/text/dedup originals) before the parts lists
+# below read their oracles
+import turbine_maintenance_etl_spark.queries_ext  # noqa: F401
+from turbine_maintenance_etl_spark.queries import REGISTRY, _t, register
+
+# (original entry, WHERE or None, SQL select items)
+Part = tuple[str, str | None, list[str]]
+
+
+def _parts_sql(parts: list[Part]) -> str:
+    """DuckDB half: each part selects from its original's oracle."""
+    return "\nUNION ALL\n".join(
+        f"SELECT {', '.join(items)} FROM (\n{REGISTRY[orig].oracle}\n)"
+        + (f" WHERE {where}" if where else "")
+        for orig, where, items in parts
+    )
+
+
+def _parts_frame(spark: SparkSession, sf_dir: str, parts: list[Part]) -> DataFrame:
+    """Spark half: each part selects from its original's builder, which
+    runs once per call even when it feeds several parts."""
+    built: dict[str, DataFrame] = {}
+    out = None
+    for orig, where, items in parts:
+        if orig not in built:
+            built[orig] = REGISTRY[orig].fn(spark, sf_dir)
+        df = built[orig] if where is None else built[orig].filter(where)
+        df = df.selectExpr(*items)
+        out = df if out is None else out.unionByName(df)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -34,155 +78,60 @@ from turbine_maintenance_etl_spark.queries import _t, register
 # become one 9-row graded entry.
 # ---------------------------------------------------------------------------
 
-@register(
-    "p_projection_cast_suite",
-    """
-    SELECT 'p1_truncate' AS op, COUNT(*) AS n,
-           ROUND(CAST(SUM(l_suppkey + l_linenumber) AS DOUBLE), 2) AS chk,
-           MIN(CAST(l_orderkey AS VARCHAR)) AS smin,
-           MAX(CAST(l_orderkey AS VARCHAR)) AS smax
-    FROM (SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber FROM lineitem)
-    UNION ALL
-    SELECT 'p2_project', COUNT(*), ROUND(SUM(l_quantity), 2),
-           MIN(CAST(l_partkey AS VARCHAR)), MAX(CAST(l_partkey AS VARCHAR))
-    FROM (SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem)
-    UNION ALL
-    SELECT 'p5_cast', COUNT(*),
-           ROUND(CAST(SUM(CAST(ROUND(o_totalprice, 0) AS BIGINT)) AS DOUBLE), 2),
-           MIN(CAST(o_orderkey AS VARCHAR)), MAX(CAST(o_orderkey AS VARCHAR))
-    FROM orders
-    UNION ALL
-    SELECT 'p6_coerce', COUNT(TRY_CAST(o_orderpriority AS DOUBLE)),
-           ROUND(COALESCE(SUM(TRY_CAST(o_orderpriority AS DOUBLE)), 0.0), 2),
-           NULL, NULL
-    FROM orders
-    UNION ALL
-    SELECT 'p7_membership', COUNT(*), ROUND(SUM(c_acctbal), 2),
-           MIN(c_mktsegment), MAX(c_mktsegment)
-    FROM customer WHERE c_mktsegment IN ('BUILDING', 'AUTOMOBILE')
-    UNION ALL
-    SELECT 'p8_compare', COUNT(*), ROUND(SUM(value), 2),
-           MIN(event_type), MAX(event_type)
-    FROM events WHERE event_type <> 'view' AND value IS NOT NULL AND value >= 50.0
-    UNION ALL
-    SELECT 'p10_rename', COUNT(*), ROUND(SUM(balance), 2),
-           MIN(supplier_name), MAX(supplier_name)
-    FROM (SELECT s_suppkey AS supplier_id, s_name AS supplier_name,
-                 ROUND(s_acctbal, 2) AS balance FROM supplier)
-    UNION ALL
-    SELECT 'p11_tag', COUNT(*), ROUND(CAST(SUM(r_regionkey) AS DOUBLE), 2),
-           MIN(dataset), MAX(dataset)
-    FROM (SELECT r_regionkey, 'testdata' AS dataset FROM region)
-    UNION ALL
-    SELECT 'p12_colregex', COUNT(*), ROUND(CAST(SUM(l_suppkey) AS DOUBLE), 2),
-           MIN(CAST(l_partkey AS VARCHAR)), MAX(CAST(l_partkey AS VARCHAR))
-    FROM (SELECT l_orderkey, l_partkey, l_suppkey FROM lineitem)
-    """,
-)
+def _checksum(op: str, chk: str, s: str) -> list[str]:
+    """(op, n, chk, smin, smax) items over all of an original's rows."""
+    return [f"'{op}' AS op", "COUNT(*) AS n", f"{chk} AS chk",
+            f"MIN({s}) AS smin", f"MAX({s}) AS smax"]
+
+
+_P_CAST_PARTS: list[Part] = [
+    ("p1_positional_truncation", None, _checksum(
+        "p1_truncate", "ROUND(CAST(SUM(l_suppkey + l_linenumber) AS DOUBLE), 2)",
+        "CAST(l_orderkey AS STRING)")),
+    ("p2_projection", None, _checksum(
+        "p2_project", "ROUND(SUM(l_quantity), 2)", "CAST(l_partkey AS STRING)")),
+    ("p5_cast_projection", None, _checksum(
+        "p5_cast", "ROUND(CAST(SUM(price_int) AS DOUBLE), 2)", "key_str")),
+    # P6 counts the values that survived the lossy coercion
+    ("p5_cast_projection", None, [
+        "'p6_coerce' AS op", "COUNT(prio_num) AS n",
+        "ROUND(COALESCE(SUM(prio_num), 0.0), 2) AS chk",
+        "CAST(NULL AS STRING) AS smin", "CAST(NULL AS STRING) AS smax"]),
+    ("p7_membership_filter", None, _checksum(
+        "p7_membership", "ROUND(SUM(acctbal), 2)", "c_mktsegment")),
+    ("p8_comparison_filter", None, _checksum(
+        "p8_compare", "ROUND(SUM(value), 2)", "event_type")),
+    ("p10_rename_projection", None, _checksum(
+        "p10_rename", "ROUND(SUM(balance), 2)", "supplier_name")),
+    ("p11_literal_tag", None, _checksum(
+        "p11_tag", "ROUND(CAST(SUM(r_regionkey) AS DOUBLE), 2)", "dataset")),
+    ("p12_regex_column_select", None, _checksum(
+        "p12_colregex", "ROUND(CAST(SUM(l_suppkey) AS DOUBLE), 2)",
+        "CAST(l_partkey AS STRING)")),
+]
+
+
+@register("p_projection_cast_suite", _parts_sql(_P_CAST_PARTS))
 def p_projection_cast_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1 positional truncation + P2 subset projection + P5 typed casts +
     P6 lossy coercion (try_cast → NULL) + P7 membership + P8 comparison
     filters + P10 rename + P11 literal tag + P12 regex column selection,
     each reduced to one deterministic checksum row (op, n, chk, smin,
-    smax). Full-row variants remain registered individually."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-
-    def row(op: str, df: DataFrame, n, chk, smin, smax) -> DataFrame:
-        return df.agg(
-            F.lit(op).alias("op"),
-            n.alias("n"),
-            chk.alias("chk"),
-            smin.alias("smin"),
-            smax.alias("smax"),
-        )
-
-    p1_src = li.select(*li.columns[:4])  # positional, like df.iloc[:, :4]
-    p1 = row(
-        "p1_truncate", p1_src,
-        F.count("*"),
-        F.round(F.sum(F.col("l_suppkey") + F.col("l_linenumber")).cast("double"), 2),
-        F.min(F.col("l_orderkey").cast("string")),
-        F.max(F.col("l_orderkey").cast("string")),
-    )
-    p2_src = li.select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-    p2 = row(
-        "p2_project", p2_src,
-        F.count("*"),
-        F.round(F.sum("l_quantity"), 2),
-        F.min(F.col("l_partkey").cast("string")),
-        F.max(F.col("l_partkey").cast("string")),
-    )
-    p5 = row(
-        "p5_cast", o,
-        F.count("*"),
-        F.round(F.sum(F.round("o_totalprice", 0).cast("bigint")).cast("double"), 2),
-        F.min(F.col("o_orderkey").cast("string")),
-        F.max(F.col("o_orderkey").cast("string")),
-    )
-    prio = F.col("o_orderpriority").try_cast("double")
-    p6 = row(
-        "p6_coerce", o,
-        F.count(prio),
-        F.round(F.coalesce(F.sum(prio), F.lit(0.0)), 2),
-        F.lit(None).cast("string"),
-        F.lit(None).cast("string"),
-    )
-    p7_src = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")
-    )
-    p7 = row(
-        "p7_membership", p7_src,
-        F.count("*"), F.round(F.sum("c_acctbal"), 2),
-        F.min("c_mktsegment"), F.max("c_mktsegment"),
-    )
-    p8_src = _t(spark, sf_dir, "events").filter(
-        (F.col("event_type") != "view")
-        & F.col("value").isNotNull()
-        & (F.col("value") >= 50.0)
-    )
-    p8 = row(
-        "p8_compare", p8_src,
-        F.count("*"), F.round(F.sum("value"), 2),
-        F.min("event_type"), F.max("event_type"),
-    )
-    p10_src = (
-        _t(spark, sf_dir, "supplier")
-        .withColumnsRenamed({"s_suppkey": "supplier_id", "s_name": "supplier_name"})
-        .select("supplier_id", "supplier_name", F.round("s_acctbal", 2).alias("balance"))
-    )
-    p10 = row(
-        "p10_rename", p10_src,
-        F.count("*"), F.round(F.sum("balance"), 2),
-        F.min("supplier_name"), F.max("supplier_name"),
-    )
-    p11_src = _t(spark, sf_dir, "region").select(
-        "r_regionkey", F.lit("testdata").alias("dataset")
-    )
-    p11 = row(
-        "p11_tag", p11_src,
-        F.count("*"),
-        F.round(F.sum("r_regionkey").cast("double"), 2),
-        F.min("dataset"), F.max("dataset"),
-    )
-    p12_src = li.select(li.colRegex("`l_.*key`"))
-    p12 = row(
-        "p12_colregex", p12_src,
-        F.count("*"),
-        F.round(F.sum("l_suppkey").cast("double"), 2),
-        F.min(F.col("l_partkey").cast("string")),
-        F.max(F.col("l_partkey").cast("string")),
-    )
-    out = p1
-    for b in (p2, p5, p6, p7, p8, p10, p11, p12):
-        out = out.unionByName(b)
-    return out
+    smax)."""
+    return _parts_frame(spark, sf_dir, _P_CAST_PARTS)
 
 
 # ---------------------------------------------------------------------------
 # P3 + P4: data-dependent schema pruning (constant columns / all-null
 # columns) in one probe table.
 # ---------------------------------------------------------------------------
+
+_P4_PARTS: list[Part] = [
+    ("p4_allnull_detection", None, [
+        "'allnull' AS probe", "col", "CAST(n_nonnull AS BIGINT) AS metric",
+        "dropped AS flag"]),
+]
+
 
 @register(
     "p_schema_pruning_suite",
@@ -197,26 +146,18 @@ def p_projection_cast_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT 'tag', COUNT(DISTINCT 'fixed') FROM orders)
     UNION ALL
-    SELECT 'allnull' AS probe, col, metric,
-           CASE WHEN metric = 0 THEN 1 ELSE 0 END AS flag
-    FROM (
-        SELECT 'ghost' AS col, COUNT(CAST(NULL AS DOUBLE)) AS metric FROM events
-        UNION ALL
-        SELECT 'value_masked',
-               COUNT(CASE WHEN value < 50 THEN NULL ELSE value END) FROM events
-        UNION ALL
-        SELECT 'event_type', COUNT(event_type) FROM events)
-    """,
+    """
+    + _parts_sql(_P4_PARTS),
 )
 def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 (constant-column detection, the reference's
-    ``nunique(dropna=True) <= 1`` pre-pass) + P4 (all-null column drop,
-    ``dropna(axis=1, how='all')``) as one probe table: one countDistinct
-    pass and one count pass, stack-unpivoted, with the keep/drop flag as
-    a checkable value."""
-    o = _t(spark, sf_dir, "orders")
+    ``nunique(dropna=True) <= 1`` pre-pass, probed with a literal
+    ``tag`` column no original carries) + P4 (all-null column drop,
+    ``dropna(axis=1, how='all')``, derived from p4_allnull_detection)
+    as one probe table with the keep/drop flag as a checkable value."""
     const = (
-        o.withColumn("tag", F.lit("fixed"))
+        _t(spark, sf_dir, "orders")
+        .withColumn("tag", F.lit("fixed"))
         .agg(
             F.countDistinct("o_orderstatus").alias("m_status"),
             F.countDistinct("o_orderpriority").alias("m_prio"),
@@ -233,37 +174,27 @@ def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("metric") <= 1, 1).otherwise(0).alias("flag"),
         )
     )
-    e = (
-        _t(spark, sf_dir, "events")
-        .withColumn("ghost", F.lit(None).cast("double"))
-        .withColumn(
-            "value_masked", F.when(F.col("value") < 50, None).otherwise(F.col("value"))
-        )
-    )
-    nulls = (
-        e.agg(
-            F.count("ghost").alias("m_ghost"),
-            F.count("value_masked").alias("m_vm"),
-            F.count("event_type").alias("m_et"),
-        )
-        .selectExpr(
-            "stack(3, 'ghost', m_ghost, 'value_masked', m_vm,"
-            " 'event_type', m_et) AS (col, metric)"
-        )
-        .select(
-            F.lit("allnull").alias("probe"),
-            "col",
-            F.col("metric").cast("bigint").alias("metric"),
-            F.when(F.col("metric") == 0, 1).otherwise(0).alias("flag"),
-        )
-    )
-    return const.unionByName(nulls)
+    return const.unionByName(_parts_frame(spark, sf_dir, _P4_PARTS))
 
 
 # ---------------------------------------------------------------------------
 # J-family: J2 positional key-gen + left outer + semi + anti in one
 # graded row (J1's broadcast equi-join keeps its own slot + plan pin).
 # ---------------------------------------------------------------------------
+
+_JOIN_PARTS: list[Part] = [
+    ("j_left_outer_join", None, [
+        "'left_outer' AS op", "COUNT(*) AS n", "ROUND(SUM(total_bal), 2) AS chk",
+        "CAST(NULL AS STRING) AS key", "CAST(SUM(n_suppliers) AS DOUBLE) AS chk2"]),
+    *(
+        ("j_semi_anti_join", f"op = '{op}'", [
+            f"'{op}' AS op", "COUNT(*) AS n",
+            "ROUND(CAST(SUM(key) AS DOUBLE), 2) AS chk", "MIN(name) AS key",
+            "CAST(NULL AS DOUBLE) AS chk2"])
+        for op in ("semi", "anti")
+    ),
+]
+
 
 @register(
     "j_join_suite",
@@ -276,33 +207,16 @@ def p_schema_pruning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(ROW_NUMBER() OVER (ORDER BY n_nationkey) AS BIGINT) AS rn
           FROM nation)
     UNION ALL
-    SELECT 'left_outer', COUNT(*), ROUND(SUM(total_bal), 2), NULL,
-           CAST(SUM(n_suppliers) AS DOUBLE)
-    FROM (SELECT n.n_name,
-                 CAST(COUNT(s.s_suppkey) AS BIGINT) AS n_suppliers,
-                 ROUND(COALESCE(SUM(s.s_acctbal), 0), 2) AS total_bal
-          FROM nation n LEFT JOIN supplier s ON s.s_nationkey = n.n_nationkey
-          GROUP BY n.n_name)
-    UNION ALL
-    SELECT 'semi', COUNT(*), ROUND(CAST(SUM(c_custkey) AS DOUBLE), 2),
-           MIN(c_name), NULL
-    FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-    UNION ALL
-    SELECT 'anti', COUNT(*), ROUND(CAST(SUM(p_partkey) AS DOUBLE), 2),
-           MIN(p_name), NULL
-    FROM part p
-    WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-    """,
+    """
+    + _parts_sql(_JOIN_PARTS),
 )
 def j_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (order-pinned row_number key generation, the RUL-file line↔unit
     mapping) + left outer + semi + anti join strategies, each reduced to
     a checksum row. The rn*key product pins the positional mapping, not
-    just the count."""
-    n = _t(spark, sf_dir, "nation")
-    rn_frame = n.select(
+    just the count, which is why J2 reads ``nation`` itself: its
+    original does not emit ``n_nationkey``."""
+    rn_frame = _t(spark, sf_dir, "nation").select(
         "n_name",
         "n_nationkey",
         F.row_number().over(Window.orderBy("n_nationkey")).cast("bigint").alias("rn"),
@@ -314,47 +228,7 @@ def j_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("rn") == 1, F.col("n_name"))).alias("key"),
         F.lit(None).cast("double").alias("chk2"),
     )
-    s = _t(spark, sf_dir, "supplier")
-    left_grouped = (
-        n.join(s, s.s_nationkey == n.n_nationkey, "left")
-        .groupBy("n_name")
-        .agg(
-            F.count("s_suppkey").alias("n_suppliers"),
-            F.round(F.coalesce(F.sum("s_acctbal"), F.lit(0.0)), 2).alias("total_bal"),
-        )
-    )
-    left = left_grouped.agg(
-        F.lit("left_outer").alias("op"),
-        F.count("*").alias("n"),
-        F.round(F.sum("total_bal"), 2).alias("chk"),
-        F.lit(None).cast("string").alias("key"),
-        F.sum("n_suppliers").cast("double").alias("chk2"),
-    )
-    c = _t(spark, sf_dir, "customer")
-    big_orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    semi = (
-        c.join(big_orders, c.c_custkey == big_orders.o_custkey, "left_semi")
-        .agg(
-            F.lit("semi").alias("op"),
-            F.count("*").alias("n"),
-            F.round(F.sum("c_custkey").cast("double"), 2).alias("chk"),
-            F.min("c_name").alias("key"),
-            F.lit(None).cast("double").alias("chk2"),
-        )
-    )
-    p = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
-    anti = (
-        p.join(li, p.p_partkey == li.l_partkey, "left_anti")
-        .agg(
-            F.lit("anti").alias("op"),
-            F.count("*").alias("n"),
-            F.round(F.sum("p_partkey").cast("double"), 2).alias("chk"),
-            F.min("p_name").alias("key"),
-            F.lit(None).cast("double").alias("chk2"),
-        )
-    )
-    return j2.unionByName(left).unionByName(semi).unionByName(anti)
+    return j2.unionByName(_parts_frame(spark, sf_dir, _JOIN_PARTS))
 
 
 # ---------------------------------------------------------------------------
@@ -362,101 +236,58 @@ def j_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # conditional share + A16 summary statistics.
 # ---------------------------------------------------------------------------
 
+_AGG_PARTS: list[Part] = [
+    ("a1_grouped_minmax", None, [
+        "'a1_minmax' AS op", "'orders_by_cust' AS k", "COUNT(*) AS n",
+        "ROUND(SUM(price_min), 2) AS v1", "ROUND(SUM(price_max), 2) AS v2",
+        "CAST(SUM(n_orders) AS DOUBLE) AS v3"]),
+    ("a10_conditional_share", None, [
+        "'a10_share' AS op", "o_orderstatus AS k", "n", "big_share AS v1",
+        "CAST(NULL AS DOUBLE) AS v2", "CAST(NULL AS DOUBLE) AS v3"]),
+    ("a16_summary_stats", None, [
+        "'a16_describe' AS op", "col AS k", "n", "mean AS v1", "std AS v2",
+        "max AS v3"]),
+]
+
+
 @register(
     "a_grouped_agg_suite",
     """
-    SELECT 'a1_minmax' AS op, 'orders_by_cust' AS k, CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(SUM(price_min), 2) AS v1, ROUND(SUM(price_max), 2) AS v2,
-           CAST(SUM(n_orders) AS DOUBLE) AS v3
-    FROM (SELECT o_custkey, ROUND(MIN(o_totalprice), 2) AS price_min,
-                 ROUND(MAX(o_totalprice), 2) AS price_max, COUNT(*) AS n_orders
-          FROM orders GROUP BY o_custkey)
-    UNION ALL
-    SELECT 'a9_two_level', NULL, COUNT(*),
-           ROUND(AVG(mx), 4), ROUND(AVG(cnt), 4), NULL
+    SELECT 'a9_two_level' AS op, CAST(NULL AS STRING) AS k, COUNT(*) AS n,
+           ROUND(AVG(mx), 4) AS v1, ROUND(AVG(cnt), 4) AS v2,
+           CAST(NULL AS DOUBLE) AS v3
     FROM (SELECT o_custkey, MAX(o_totalprice) AS mx, COUNT(*) AS cnt
           FROM orders GROUP BY o_custkey)
     UNION ALL
-    SELECT 'a10_share', o_orderstatus, COUNT(*),
-           ROUND(SUM(CASE WHEN o_totalprice > 300000 THEN 1 ELSE 0 END)
-                 / CAST(COUNT(*) AS DOUBLE), 6), NULL, NULL
-    FROM orders GROUP BY o_orderstatus
-    UNION ALL
-    SELECT 'a16_describe', 'l_quantity', COUNT(l_quantity),
-           ROUND(AVG(l_quantity), 4), ROUND(STDDEV(l_quantity), 4),
-           ROUND(MAX(l_quantity), 4)
-    FROM lineitem
-    UNION ALL
-    SELECT 'a16_describe', 'l_discount', COUNT(l_discount),
-           ROUND(AVG(l_discount), 4), ROUND(STDDEV(l_discount), 4),
-           ROUND(MAX(l_discount), 4)
-    FROM lineitem
-    """,
+    """
+    + _parts_sql(_AGG_PARTS),
 )
 def a_grouped_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (grouped min/max/count, re-aggregated to a checksum over all
-    1500 groups) + A9 (two-level agg — DAX AVERAGEX over SUMMARIZE) +
-    A10 (conditional share) + A16 (describe()-style summary stats)."""
-    o = _t(spark, sf_dir, "orders")
-    # mx is the UNROUNDED max (a9 averages it; price_max is rounded per
-    # A1's checksum contract — not a duplicate); n_orders serves both
-    per_cust = o.groupBy("o_custkey").agg(
-        F.round(F.min("o_totalprice"), 2).alias("price_min"),
-        F.round(F.max("o_totalprice"), 2).alias("price_max"),
-        F.count("*").alias("n_orders"),
-        F.max("o_totalprice").alias("mx"),
-    )
-    a1 = per_cust.agg(
-        F.lit("a1_minmax").alias("op"),
-        F.lit("orders_by_cust").alias("k"),
-        F.count("*").alias("n"),
-        F.round(F.sum("price_min"), 2).alias("v1"),
-        F.round(F.sum("price_max"), 2).alias("v2"),
-        F.sum("n_orders").cast("double").alias("v3"),
+    customer groups) + A9 (two-level agg — DAX AVERAGEX over SUMMARIZE;
+    hand-written because its original does not emit the customer count)
+    + A10 (conditional share) + A16 (describe()-style summary stats)."""
+    per_cust = _t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
+        F.max("o_totalprice").alias("mx"), F.count("*").alias("cnt")
     )
     a9 = per_cust.agg(
         F.lit("a9_two_level").alias("op"),
         F.lit(None).cast("string").alias("k"),
         F.count("*").alias("n"),
         F.round(F.avg("mx"), 4).alias("v1"),
-        F.round(F.avg("n_orders"), 4).alias("v2"),
+        F.round(F.avg("cnt"), 4).alias("v2"),
         F.lit(None).cast("double").alias("v3"),
     )
-    # reuse the registered original (r10 review: the threshold/rounding
-    # previously lived verbatim in both files, free to drift) and
-    # reshape into the suite's row shape
-    a10 = REGISTRY["a10_conditional_share"].fn(spark, sf_dir).select(
-        F.lit("a10_share").alias("op"),
-        F.col("o_orderstatus").alias("k"),
-        "n",
-        F.col("big_share").alias("v1"),
-        F.lit(None).cast("double").alias("v2"),
-        F.lit(None).cast("double").alias("v3"),
-    )
-    li = _t(spark, sf_dir, "lineitem")
-
-    def describe(col: str) -> DataFrame:
-        return li.agg(
-            F.lit("a16_describe").alias("op"),
-            F.lit(col).alias("k"),
-            F.count(col).alias("n"),
-            F.round(F.avg(col), 4).alias("v1"),
-            F.round(F.stddev(col), 4).alias("v2"),
-            F.round(F.max(col), 4).alias("v3"),
-        )
-
-    return (
-        a1.unionByName(a9)
-        .unionByName(a10)
-        .unionByName(describe("l_quantity"))
-        .unionByName(describe("l_discount"))
-    )
+    return a9.unionByName(_parts_frame(spark, sf_dir, _AGG_PARTS))
 
 
 # ---------------------------------------------------------------------------
 # W-family: W1 partition max + W2/W3 rolling means + W4 lag diff + W5
 # z-score + W6/A4 last-per-group flag — ONE projection, two WindowSpecs
 # sharing one hash exchange (the engine's single-WindowSpec rule).
+# Hand-written in both engines: deriving it from the five originals
+# would run five window plans, and the NaN-aware stddev exists only in
+# the DuckDB SQL.
 # ---------------------------------------------------------------------------
 
 @register(
@@ -512,18 +343,13 @@ def w_core_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every branch LIMIT-bounded so Catalyst plans TakeOrderedAndProject.
 # ---------------------------------------------------------------------------
 
+_ORDER_PARTS: list[Part] = [("o1_composite_sort", None, ["*"])]
+
+
 @register(
     "o_order_limit_suite",
-    """
-    SELECT * FROM (
-        SELECT 'composite' AS src, o_custkey AS k1,
-               CAST(o_orderkey AS VARCHAR) AS k2, ROUND(o_totalprice, 2) AS price
-        FROM orders ORDER BY o_custkey, o_orderkey LIMIT 500)
-    UNION ALL
-    SELECT * FROM (
-        SELECT 'topk_value' AS src, p_partkey AS k1, p_name AS k2,
-               ROUND(p_retailprice, 2) AS price
-        FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 15)
+    _parts_sql(_ORDER_PARTS)
+    + """
     UNION ALL
     SELECT * FROM (
         SELECT 'topk_recent' AS src, event_id AS k1,
@@ -533,35 +359,14 @@ def w_core_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def o_order_limit_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1 (composite unit,cycle-style sort) + O2 (top-k by timestamp) +
-    O3/O4 (top-k by value, head/limit) in one graded row. All three
-    branches are LIMIT-bounded sorts → TakeOrderedAndProject, never a
-    global sort."""
-    o = _t(spark, sf_dir, "orders")
-    composite = (
-        o.orderBy("o_custkey", "o_orderkey")
-        .limit(500)
-        .select(
-            F.lit("composite").alias("src"),
-            F.col("o_custkey").alias("k1"),
-            F.col("o_orderkey").cast("string").alias("k2"),
-            F.round("o_totalprice", 2).alias("price"),
-        )
-    )
-    p = _t(spark, sf_dir, "part")
-    topk_value = (
-        p.orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-        .limit(15)
-        .select(
-            F.lit("topk_value").alias("src"),
-            F.col("p_partkey").alias("k1"),
-            F.col("p_name").alias("k2"),
-            F.round("p_retailprice", 2).alias("price"),
-        )
-    )
-    e = _t(spark, sf_dir, "events")
+    """O1 (composite unit,cycle-style sort) + O3/O4 (top-k by value,
+    head/limit) — exactly o1_composite_sort's rows — + O2 (top-k by
+    timestamp, hand-written: o2_topk_recent does not emit ``value``).
+    All three branches are LIMIT-bounded sorts → TakeOrderedAndProject,
+    never a global sort."""
     topk_recent = (
-        e.orderBy(F.desc("ts"), F.desc("event_id"))
+        _t(spark, sf_dir, "events")
+        .orderBy(F.desc("ts"), F.desc("event_id"))
         .limit(100)
         .select(
             F.lit("topk_recent").alias("src"),
@@ -570,43 +375,28 @@ def o_order_limit_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("value", 2).alias("price"),
         )
     )
-    return composite.unionByName(topk_value).unionByName(topk_recent)
+    return _parts_frame(spark, sf_dir, _ORDER_PARTS).unionByName(topk_recent)
 
 
 # ---------------------------------------------------------------------------
-# Round-5 window compaction (WINDOW_CHANGELOG.md entry r5): four more
-# tagged-union suites over entries that were individually graded in r4.
-# Each suite UNIONS the original builders' full row-level output (tagged,
-# columns aligned) — no checksum reduction, so per-row driver evidence is
-# preserved — and unions the original oracles the same way. The freed
-# slots promote the round-4 flagship entries (curation v3, IVF-PQ, sb3
-# LM, normalized dedup) plus the round-5 image-phash dedup into the
-# graded window. The original single entries remain registered below the
-# window, still selfchecked per round.
+# Round-5 window compaction (WINDOW_CHANGELOG.md entry r5): suites that
+# UNION the original builders' full row-level output (tagged, columns
+# aligned) — no checksum reduction, so per-row graded evidence is
+# preserved. The freed slots promoted the round-4 flagship entries into
+# the graded window.
 # ---------------------------------------------------------------------------
 
-from turbine_maintenance_etl_spark.queries import REGISTRY  # noqa: E402
-import turbine_maintenance_etl_spark.queries_llm  # noqa: E402,F401  (registers sim/pii entries)
-import turbine_maintenance_etl_spark.queries_ext  # noqa: E402,F401  (registers chunking/session entries)
-
-
-def _wrap_union(parts: list[tuple[str, str]]) -> str:
-    """Tag-union complete oracle SELECTs: [(tag, sql)] -> one query."""
-    return "\nUNION ALL\n".join(
-        f"SELECT '{tag}' AS variant, * FROM ({sql})" for tag, sql in parts
+_SIM_PARTS: list[Part] = [
+    (orig, None, [f"'{variant}' AS variant", "*"])
+    for variant, orig in (
+        ("brute", "sim_brute_force_topk"),
+        ("lsh", "sim_lsh_topk"),
+        ("multiprobe", "sim_multiprobe_topk"),
     )
+]
 
 
-@register(
-    "sim_topk_suite",
-    _wrap_union(
-        [
-            ("brute", REGISTRY["sim_brute_force_topk"].oracle),
-            ("lsh", REGISTRY["sim_lsh_topk"].oracle),
-            ("multiprobe", REGISTRY["sim_multiprobe_topk"].oracle),
-        ]
-    ),
-)
+@register("sim_topk_suite", _parts_sql(_SIM_PARTS))
 def sim_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity-search top-k family in one graded row: the guarded
     brute-force cosine baseline, single-probe SRP-LSH, and multi-probe
@@ -615,211 +405,100 @@ def sim_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same fixed seeded hyperplanes embedded in both engines). The IVF /
     PQ / IVF-PQ cousins carry their own rows-only entries (iterative
     k-means is not SQL-expressible)."""
-    out = None
-    for tag, name in (
-        ("brute", "sim_brute_force_topk"),
-        ("lsh", "sim_lsh_topk"),
-        ("multiprobe", "sim_multiprobe_topk"),
-    ):
-        part = REGISTRY[name].fn(spark, sf_dir).select(
-            F.lit(tag).alias("variant"), "*"
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+    return _parts_frame(spark, sf_dir, _SIM_PARTS)
 
 
-@register(
-    "events_window_suite",
-    _wrap_union(
-        [
-            (
-                "tumbling",
-                """
-                SELECT CAST(FLOOR(epoch_us(ts) / 300000000.0) AS BIGINT) AS k1,
-                       event_type AS k2, CAST(NULL AS BIGINT) AS k3,
-                       COUNT(*) AS n, ROUND(SUM(value), 4) AS total_value
-                FROM events GROUP BY 1, 2
-                """,
-            ),
-            (
-                "session",
-                f"""
-                SELECT k1, CAST(start_us AS VARCHAR) AS k2, end_us AS k3,
-                       n, total_value
-                FROM (
-                    SELECT user_id AS k1, session_start_us AS start_us,
-                           session_end_us AS end_us, n_events AS n, total_value
-                    FROM ({REGISTRY["events_session_window"].oracle})
-                )
-                """,
-            ),
-        ]
-    ),
-)
+_EVENTS_WINDOW_PARTS: list[Part] = [
+    ("events_tumbling_window", None, [
+        "'tumbling' AS variant", "win5m AS k1", "event_type AS k2",
+        "CAST(NULL AS BIGINT) AS k3", "n", "total_value"]),
+    ("events_session_window", None, [
+        "'session' AS variant", "user_id AS k1",
+        "CAST(session_start_us AS STRING) AS k2", "session_end_us AS k3",
+        "n_events AS n", "total_value"]),
+]
+
+
+@register("events_window_suite", _parts_sql(_EVENTS_WINDOW_PARTS))
 def events_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time windowing family in one graded row: the 5-minute
     tumbling aggregation (batch twin of the streaming path) + native
     session windows (30-min gap, streaming/ingest.py plan fragment) —
     full row output of both originals, columns aligned
     (variant, k1, k2, k3, n, total_value)."""
-    tumb = REGISTRY["events_tumbling_window"].fn(spark, sf_dir).select(
-        F.lit("tumbling").alias("variant"),
-        F.col("win5m").alias("k1"),
-        F.col("event_type").alias("k2"),
-        F.lit(None).cast("bigint").alias("k3"),
-        "n",
-        "total_value",
-    )
-    sess = REGISTRY["events_session_window"].fn(spark, sf_dir).select(
-        F.lit("session").alias("variant"),
-        F.col("user_id").alias("k1"),
-        F.col("session_start_us").cast("string").alias("k2"),
-        F.col("session_end_us").alias("k3"),
-        F.col("n_events").alias("n"),
-        "total_value",
-    )
-    return tumb.unionByName(sess)
+    return _parts_frame(spark, sf_dir, _EVENTS_WINDOW_PARTS)
 
 
-@register(
-    "text_pipeline_suite",
-    _wrap_union(
-        [
-            (
-                "chunk",
-                f"""
-                SELECT doc_id, chunk_id AS k1, CAST(chunk_tokens AS BIGINT) AS k2,
-                       chunk_text AS s
-                FROM ({REGISTRY["text_chunking"].oracle})
-                """,
-            ),
-            (
-                "pii",
-                f"""
-                SELECT doc_id, n_emails AS k1, n_phones AS k2, redacted_md5 AS s
-                FROM ({REGISTRY["text_pii_redaction"].oracle})
-                """,
-            ),
-        ]
-    ),
-)
+_TEXT_PARTS: list[Part] = [
+    ("text_chunking", None, [
+        "'chunk' AS variant", "doc_id", "chunk_id AS k1",
+        "CAST(chunk_tokens AS BIGINT) AS k2", "chunk_text AS s"]),
+    ("text_pii_redaction", None, [
+        "'pii' AS variant", "doc_id", "n_emails AS k1", "n_phones AS k2",
+        "redacted_md5 AS s"]),
+]
+
+
+@register("text_pipeline_suite", _parts_sql(_TEXT_PARTS))
 def text_pipeline_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Narrow text-transform family in one graded row: the 64/8
     overlapping token-window chunker + the PII redaction proof (counts
     AND md5 of the fully redacted text on synthetic injected PII) —
     full row output of both originals, aligned to
     (variant, doc_id, k1, k2, s). Both are zero-shuffle narrow maps."""
-    chunk = REGISTRY["text_chunking"].fn(spark, sf_dir).select(
-        F.lit("chunk").alias("variant"),
-        "doc_id",
-        F.col("chunk_id").alias("k1"),
-        F.col("chunk_tokens").cast("bigint").alias("k2"),
-        F.col("chunk_text").alias("s"),
-    )
-    pii = REGISTRY["text_pii_redaction"].fn(spark, sf_dir).select(
-        F.lit("pii").alias("variant"),
-        "doc_id",
-        F.col("n_emails").alias("k1"),
-        F.col("n_phones").alias("k2"),
-        F.col("redacted_md5").alias("s"),
-    )
-    return chunk.unionByName(pii)
+    return _parts_frame(spark, sf_dir, _TEXT_PARTS)
 
 
-@register(
-    "dedup_graph_suite",
-    _wrap_union(
-        [
-            (
-                "clusters",
-                f"""
-                SELECT doc_id, cluster_id AS k, CAST(NULL AS VARCHAR) AS s
-                FROM ({REGISTRY["dedup_cluster_resolution"].oracle})
-                """,
-            ),
-            (
-                "survivors",
-                f"""
-                SELECT doc_id, CAST(NULL AS BIGINT) AS k, source AS s
-                FROM ({REGISTRY["dedup_neardup_survivors"].oracle})
-                """,
-            ),
-        ]
-    ),
-)
+_DEDUP_PARTS: list[Part] = [
+    ("dedup_cluster_resolution", None, [
+        "'clusters' AS variant", "doc_id", "cluster_id AS k",
+        "CAST(NULL AS STRING) AS s"]),
+    ("dedup_neardup_survivors", None, [
+        "'survivors' AS variant", "doc_id", "CAST(NULL AS BIGINT) AS k",
+        "source AS s"]),
+]
+
+
+@register("dedup_graph_suite", _parts_sql(_DEDUP_PARTS))
 def dedup_graph_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-pair graph resolution family in one graded row: connected-
     component cluster ids (iterative min-label propagation with pointer
     jumping, vs the oracle's recursive-CTE transitive closure) + the
     kept corpus after collapsing each cluster to its min-id survivor.
     The clusters frame is computed ONCE (localCheckpointed by the
-    resolver) and feeds both branches — strictly cheaper than the two
-    separately graded originals."""
+    resolver) and feeds both branches — strictly cheaper than calling
+    the two originals, which would each run the connected-components
+    loop."""
     from turbine_maintenance_etl_spark.llm import dedup as DD
 
     docs = _t(spark, sf_dir, "documents")
     clusters = DD.resolve_duplicate_clusters(DD.minhash_lsh_candidates(docs))
-    c_rows = clusters.select(
-        F.lit("clusters").alias("variant"),
-        "doc_id",
-        F.col("cluster_id").alias("k"),
-        F.lit(None).cast("string").alias("s"),
-    )
-    survivors = DD.neardup_survivors(docs, clusters).select(
-        F.lit("survivors").alias("variant"),
-        "doc_id",
-        F.lit(None).cast("bigint").alias("k"),
-        F.col("source").alias("s"),
-    )
-    return c_rows.unionByName(survivors)
+    (_, _, c_items), (_, _, s_items) = _DEDUP_PARTS
+    survivors = DD.neardup_survivors(docs, clusters)
+    return clusters.selectExpr(*c_items).unionByName(survivors.selectExpr(*s_items))
 
 
-@register(
-    "agg_grouping_suite",
-    _wrap_union(
-        [
-            ("grouping", REGISTRY["agg_rollup_cube"].oracle),
-            (
-                "pivot",
-                """
-                SELECT 'pivot' AS src, l_returnflag AS d1, 'O' AS d2,
-                       CAST(-1 AS BIGINT) AS gid, CAST(NULL AS BIGINT) AS n,
-                       ROUND(SUM(CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END), 2) AS measure
-                FROM lineitem GROUP BY l_returnflag
-                UNION ALL
-                SELECT 'pivot', l_returnflag, 'F', CAST(-1 AS BIGINT),
-                       CAST(NULL AS BIGINT),
-                       ROUND(SUM(CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END), 2)
-                FROM lineitem GROUP BY l_returnflag
-                """,
-            ),
-        ]
+_GROUPING_PARTS: list[Part] = [
+    ("agg_rollup_cube", None, ["'grouping' AS variant", "*"]),
+    *(
+        ("agg_pivot", None, [
+            "'pivot' AS variant", "'pivot' AS src", "l_returnflag AS d1",
+            f"'{status}' AS d2", "CAST(-1 AS BIGINT) AS gid",
+            "CAST(NULL AS BIGINT) AS n", f"qty_{status} AS measure"])
+        for status in ("O", "F")
     ),
-)
+]
+
+
+@register("agg_grouping_suite", _parts_sql(_GROUPING_PARTS))
 def agg_grouping_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-sets family in one graded row (round-5 third
     compaction): ROLLUP + CUBE with grouping_id (agg_rollup_cube's full
     row output, variant 'grouping') and the PIVOT entry's rows melted
     to the same (src, d1, d2, gid, n, measure) shape (variant 'pivot',
     one row per pivoted cell — no checksum reduction, the cell values
-    ARE the rows). The originals remain registered below the window."""
-    ro = REGISTRY["agg_rollup_cube"].fn(spark, sf_dir).select(
-        F.lit("grouping").alias("variant"), "*"
-    )
-    pv = REGISTRY["agg_pivot"].fn(spark, sf_dir)
-    melted = None
-    for status in ("O", "F"):
-        part = pv.select(
-            F.lit("pivot").alias("variant"),
-            F.lit("pivot").alias("src"),
-            F.col("l_returnflag").alias("d1"),
-            F.lit(status).alias("d2"),
-            F.lit(-1).cast("bigint").alias("gid"),
-            F.lit(None).cast("bigint").alias("n"),
-            F.col(f"qty_{status}").alias("measure"),
-        )
-        melted = part if melted is None else melted.unionByName(part)
-    return ro.unionByName(melted)
+    ARE the rows)."""
+    return _parts_frame(spark, sf_dir, _GROUPING_PARTS)
 
 
 def _melt_oracle(variant: str, sql: str, keys: list[str], metrics: list[str]) -> str:
