@@ -33,6 +33,10 @@ Usage: python scripts/ledger.py <subcommand> ...
   explain OUTDIR SUFFIX NAME [NAME ...]
       write OUTDIR/<name>_<SUFFIX>.txt with .explain("formatted"),
       pre-execution, at $SPARK_GRAFT_SF_DIR (default: the sf0.01 corpus).
+  rows NAME [NAME ...] [--sf-dir D]
+      one line per entry: its row count and the sha256 of its schema
+      JSON plus its sorted rows. Equal lines from two checkouts mean a
+      refactor left the entry's output unchanged.
 
 SF_DIR defaults to the sf0.1 corpus beside bench.py's sf0.001 warm-up
 corpus. jobs and exchanges read the Spark UI's REST API, so they switch
@@ -42,6 +46,7 @@ SPARK_UI on unless it is set. SPARK_GRAFT_CPUS sizes local mode.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import re
@@ -304,6 +309,14 @@ def cmd_explain(spark, a) -> None:
         print(f"wrote {path} ({len(plan)} chars)", file=sys.stderr)
 
 
+def cmd_rows(spark, a) -> None:
+    for name in _check(a.names):
+        df = REGISTRY[name].fn(spark, a.sf_dir)
+        rows = sorted(repr(tuple(r)) for r in df.collect())
+        digest = hashlib.sha256("\n".join([df.schema.json(), *rows]).encode()).hexdigest()
+        print(f"{name} rows={len(rows)} sha256={digest}")
+
+
 def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
@@ -330,6 +343,9 @@ def _parser() -> argparse.ArgumentParser:
     s.add_argument("outdir")
     s.add_argument("suffix")
     s.add_argument("names", nargs="+")
+    s = sub.add_parser("rows")
+    s.add_argument("names", nargs="+")
+    s.add_argument("--sf-dir", default=DEFAULT_SF)
     return p
 
 
@@ -341,6 +357,7 @@ COMMANDS = {
     "jobs": cmd_jobs,
     "exchanges": cmd_exchanges,
     "explain": cmd_explain,
+    "rows": cmd_rows,
 }
 
 

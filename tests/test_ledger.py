@@ -53,3 +53,16 @@ def test_scale_replicates_and_prints_ratio_row(spark, capsys, monkeypatch, tmp_p
     rep = spark.read.parquet(str(tmp_path / "probe2x" / "documents.parquet"))
     assert rep.count() == 2 * docs.count()
     assert rep.select("doc_id").distinct().count() == rep.count()
+
+
+def test_rows_prints_stable_digest_per_entry(spark, capsys):
+    ledger.main(["rows", ENTRY, ENTRY, "p5_cast_projection", "--sf-dir", SF_DIR], spark=spark)
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 3
+    parsed = [re.fullmatch(r"(\S+) rows=(\d+) sha256=([0-9a-f]{64})", ln) for ln in lines]
+    assert all(parsed)
+    (n0, r0, h0), (n1, r1, h1), (n2, _, h2) = (m.groups() for m in parsed)
+    assert (n0, n1, n2) == (ENTRY, ENTRY, "p5_cast_projection")
+    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    assert (r0, h0) == (r1, h1) and int(r0) == lineitem.count()
+    assert h2 != h0

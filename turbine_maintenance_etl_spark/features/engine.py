@@ -93,7 +93,8 @@ def variable_sensor_intersection(dfs: dict[str, DataFrame]) -> list[str]:
     """Sorted intersection of each dataset's variable (non-constant)
     sensors — the multi-dataset schema-consistency pre-pass
     (scripts/etl_turbofan.py:175-206, intersection at 201, sort at 204).
-    Driver-side set math over one countDistinct agg per dataset."""
+    Driver-side set math over one (min, max, count) agg per dataset
+    (``constant_columns``)."""
     kept: set[str] | None = None
     for name, df in dfs.items():
         sensors = sensor_columns(df.columns)

@@ -23,6 +23,8 @@ import struct
 
 import numpy as np
 
+from .multimodal import wav_container
+
 # IMA ADPCM step-size table (89 entries) and index-adjustment table
 STEP_TABLE: tuple[int, ...] = (
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17,
@@ -204,13 +206,7 @@ def encode_wav_adpcm(samples: np.ndarray, sample_rate: int,
         "<HHIIHHHH", 0x11, n_ch, sample_rate, byte_rate, block_align, 4,
         2, samples_per_block,
     )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n_frames)
-        + b"data" + struct.pack("<I", len(blocks)) + bytes(blocks)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return wav_container(fmt, bytes(blocks), n_frames)
 
 
 # ------------------------------------------------------------ MS ADPCM
@@ -385,10 +381,4 @@ def encode_wav_ms_adpcm(samples: np.ndarray, sample_rate: int,
         "<HHIIHHHHH", 0x02, n_ch, sample_rate, byte_rate, block_align, 4,
         4 + len(coefs), samples_per_block, 7,
     ) + coefs
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n_frames)
-        + b"data" + struct.pack("<I", len(blocks)) + bytes(blocks)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return wav_container(fmt, bytes(blocks), n_frames)

@@ -103,6 +103,8 @@ def encode_wav_g711(samples: np.ndarray, sample_rate: int,
     (same policy as the ADPCM/JPEG/PNG encoders)."""
     import struct
 
+    from .multimodal import wav_container
+
     if samples.ndim != 2:
         raise ValueError(f"expected (frames, channels) samples, got {samples.shape}")
     n_frames, n_ch = samples.shape
@@ -113,10 +115,4 @@ def encode_wav_g711(samples: np.ndarray, sample_rate: int,
     fmt = struct.pack(
         "<HHIIHHH", fmt_tag, n_ch, sample_rate, sample_rate * n_ch, n_ch, 8, 0
     )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n_frames)
-        + b"data" + struct.pack("<I", len(raw)) + raw
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return wav_container(fmt, raw, n_frames)

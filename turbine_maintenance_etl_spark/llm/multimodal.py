@@ -401,6 +401,21 @@ def resize_images(
 # --- stdlib re-encode) — the audio twin of the image resize ----------------
 
 
+def wav_container(fmt: bytes, data: bytes, fact_frames: int | None = None) -> bytes:
+    """RIFF/WAVE bytes from a ``fmt `` chunk body and a ``data`` chunk
+    body, with a ``fact`` chunk (frame count, which non-PCM decoders use
+    to trim block padding) between them when ``fact_frames`` is given.
+    The one container writer behind every WAV encoder in the package."""
+    fact = b"" if fact_frames is None else b"fact" + struct.pack("<II", 4, fact_frames)
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + fact
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     """Minimal RIFF/WAVE PCM16 encoder for (n_frames, n_channels)
     float32 samples in [-1, 1]. Round-trips through
@@ -410,15 +425,9 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     n_frames, n_ch = samples.shape
     pcm = np.clip(samples, -1.0, 1.0)
     pcm = np.round(pcm * 32767.0).astype("<i2").reshape(-1)
-    raw = pcm.tobytes()
     byte_rate = sample_rate * n_ch * 2
     fmt = struct.pack("<HHIIHH", 1, n_ch, sample_rate, byte_rate, n_ch * 2, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(raw)) + raw
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return wav_container(fmt, pcm.tobytes())
 
 
 def resample_linear(samples: np.ndarray, rate_in: int, rate_out: int) -> np.ndarray:

@@ -76,10 +76,10 @@ def run_etl(spark: SparkSession, cfg: EtlConfig, write: bool = True) -> EtlResul
     """Full ETL: scan → schema-consistency pre-pass → union → feature
     engine → partitioned sinks.
 
-    The constant-sensor pre-pass is one countDistinct aggregation per
-    dataset (a metadata-scale job), mirroring the reference's extra full
-    read (scripts/etl_turbofan.py:175-206) but as Spark jobs whose scan
-    prunes to sensor columns only."""
+    The constant-sensor pre-pass is one (min, max, count) aggregation
+    per dataset (a metadata-scale job, ``constant_columns``), mirroring
+    the reference's extra full read (scripts/etl_turbofan.py:175-206)
+    but as Spark jobs whose scan prunes to sensor columns only."""
     if not cfg.datasets:
         raise ValueError("run_etl: config has no datasets")
     raws = {

@@ -11,13 +11,16 @@ the hash family is engine-independent by construction).
 from __future__ import annotations
 
 import random
+import struct
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from turbine_maintenance_etl_spark.llm import dedup as D
 from turbine_maintenance_etl_spark.llm import similarity as S
 from turbine_maintenance_etl_spark.llm import text as TX
+from turbine_maintenance_etl_spark.llm.multimodal import wav_container
 from turbine_maintenance_etl_spark.queries import REGISTRY, _t, register
 from turbine_maintenance_etl_spark.util import ensure_parallelism
 
@@ -1999,6 +2002,115 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.remove_duplicated_spans(_t(spark, sf_dir, "documents"), n=8, min_count=2)
 
 
+# --- Media codec proofs -------------------------------------------------
+
+
+def _media(spark: SparkSession, sf_dir: str, make) -> DataFrame:
+    """``(doc_id, media)`` with ``media = make(doc_id)`` for every
+    document. The doc_id projection of a small parquet arrives as ONE
+    partition, which would serialize the ~2 ms/row pure-Python encode
+    onto one core (measured on dedup_image_phash_jpeg: its whole 10 s
+    bench cost was the single-partition generator); one cheap shuffle
+    of the 8-byte ids buys full-width codec parallelism."""
+    import pandas as pd
+
+    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
+
+    def gen(it):
+        for pdf in it:
+            rows = [{"doc_id": int(d), "media": make(int(d))} for d in pdf["doc_id"]]
+            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+
+    return docs.mapInPandas(gen, schema="doc_id bigint, media binary")
+
+
+def _image_tail(media: DataFrame) -> DataFrame:
+    """56-bit dHash + aHash per image, min-id survivor per dHash."""
+    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
+
+    return phash_dedup(image_phash(media)).select("doc_id", "dhash", "ahash", "survivor")
+
+
+def _audio_tail(media: DataFrame) -> DataFrame:
+    """56-bit envelope fingerprint per clip, min-id survivor per
+    fingerprint."""
+    from turbine_maintenance_etl_spark.llm.multimodal import audio_fingerprint
+
+    w = Window.partitionBy("afp")
+    return audio_fingerprint(media).select(
+        "doc_id",
+        "afp",
+        "n_frames",
+        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
+    )
+
+
+def _codec_proof(tail):
+    """Turn ``make(doc_id) -> bytes`` into the registry builder
+    ``tail(_media(spark, sf_dir, make))``.
+
+    Each codec proof gives every document one deterministic media blob,
+    runs the REAL decode and perceptual-hash path end to end and keeps a
+    min-id survivor per hash. The signal is exact under every container
+    an entry mixes in, so its DuckDB twin recomputes the hashes from the
+    pixel or sample formula alone and must match bit for bit. Scale
+    shape, the same for every proof: one Arrow-batched map over the
+    binary column and an 8-byte hash shuffle, never pixels or samples.
+    The builder keeps make's name and docstring and exposes make as
+    ``.make``, so the container mix is testable without Spark."""
+
+    def deco(make):
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return tail(_media(spark, sf_dir, make))
+
+        build.__name__ = build.__qualname__ = make.__name__
+        build.__doc__ = make.__doc__
+        build.make = make
+        return build
+
+    return deco
+
+
+_image_proof = _codec_proof(_image_tail)
+_audio_proof = _codec_proof(_audio_tail)
+
+
+def _block_pixels(g: int, v: int) -> np.ndarray:
+    """The 16x24 grayscale image _JPEG_PHASH_ORACLE grades: constant per
+    8x8 block (value keyed g per block) plus a +v brightness variant."""
+    br = np.arange(16)[:, None] // 8
+    bc = np.arange(24)[None, :] // 8
+    return ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
+
+
+def _mono16k_wav(tag: int, bits: int, data: bytes) -> bytes:
+    """A mono 16 kHz WAV of ``bits``-bit samples in WAVE format ``tag``."""
+    fmt = struct.pack("<HHIIHH", tag, 1, 16000, 16000 * bits // 8, bits // 8, bits)
+    return wav_container(fmt, data)
+
+
+# fingerprint + survivor tail shared by the audio proofs' DuckDB twins;
+# each entry's own CTEs end in samp(doc_id, i, k, a): one row per
+# sample i, k = i // 10 its envelope window, a its magnitude
+_AUDIO_FP_TAIL = """
+    wins AS (
+        SELECT doc_id, k, SUM(a) AS wa FROM samp GROUP BY doc_id, k),
+    tot AS (
+        SELECT doc_id, SUM(wa) AS ta FROM wins GROUP BY doc_id),
+    fp AS (
+        SELECT w.doc_id,
+               CAST(SUM(CASE WHEN w.wa * 56 > t.ta
+                        THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS afp
+        FROM wins w JOIN tot t USING (doc_id) GROUP BY w.doc_id)
+    SELECT doc_id, afp, CAST(560 AS BIGINT) AS n_frames,
+           doc_id = MIN(doc_id) OVER (PARTITION BY afp) AS survivor
+    FROM fp
+    """
+
+
+def _audio_oracle(ctes: str) -> str:
+    return f"WITH {ctes},{_AUDIO_FP_TAIL}"
+
 
 @register(
     "dedup_image_phash",
@@ -2030,7 +2142,8 @@ def dedup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d JOIN dh USING (doc_id) JOIN ah USING (doc_id)
     """,
 )
-def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash(did: int) -> bytes:
     """IMAGE dedup via perceptual hash — the image twin of the text
     dedup family (closes the round-4 verdict's multimodal-dedup gap).
     Every document gets a deterministic synthetic 18x16 grayscale PNG
@@ -2046,44 +2159,19 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly oracle-checkable: PNG round-trip is lossless and the
     nearest-neighbor grid is integer arithmetic, so the DuckDB twin
     recomputes both hashes from the pixel formula + the same resize
-    index map ((2r+1)*h // 2*out_h) and must match bit for bit. Scale:
-    hashing is one Arrow-batched map over the binary column, dedup
-    shuffles 8-byte hash keys — never pixels."""
-    import numpy as np
-    import pandas as pd
+    index map ((2r+1)*h // 2*out_h) and must match bit for bit."""
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_png
 
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        encode_png,
-        image_phash,
-        phash_dedup,
-    )
-
-    # single-partition doc_id scans serialize the per-row codec work
-    # onto one core (measured on the JPEG sibling: the whole bench cost
-    # was the unparallelized generator) — shuffle the 8-byte ids wide
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 3, did % 3
-                r = np.arange(16)[:, None]
-                c = np.arange(18)[None, :]
-                px = ((g * 37 + r * 11 + c * 7) % 250 + v * 2).astype(np.uint8)
-                rows.append({"doc_id": did, "media": encode_png(px[:, :, None])})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    g, v = did // 3, did % 3
+    r = np.arange(16)[:, None]
+    c = np.arange(18)[None, :]
+    px = ((g * 37 + r * 11 + c * 7) % 250 + v * 2).astype(np.uint8)
+    return encode_png(px[:, :, None])
 
 
-# shared by the baseline and mixed-baseline/progressive JPEG phash
-# entries: both generators emit the SAME pixels (q100 block-constant ->
-# bit-exact decode), so one SQL twin grades both
+# shared by the six _block_pixels entries: every container they mix in
+# decodes to the SAME pixels (q100 block-constant JPEG is bit-exact, the
+# lossless formats are exact), so one SQL twin grades all six
 _JPEG_PHASH_ORACLE = """
     WITH base AS (
         SELECT doc_id, doc_id // 2 AS g, doc_id % 2 AS v FROM documents),
@@ -2118,7 +2206,8 @@ _JPEG_PHASH_ORACLE = """
 
 
 @register("dedup_image_phash_jpeg", _JPEG_PHASH_ORACLE)
-def dedup_image_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash_jpeg(did: int) -> bytes:
     """Image dedup over REAL JPEG bytes — the round-7 companion to
     dedup_image_phash, proving the from-spec baseline JPEG codec
     (llm/jpeg.py) end to end under the driver's oracle. Every document
@@ -2133,66 +2222,24 @@ def dedup_image_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit for bit. The full real path runs: encode_jpeg_baseline ->
     image_phash (decode_jpeg_pixels -> grayscale -> resize -> 56-bit
     hashes) -> min-id survivor. Brightness variants collapse (both
-    hashes shift-invariant); sha256 would keep both. Scale: same as
-    the PNG entry — one Arrow-batched map, 8-byte hash shuffle."""
-    import numpy as np
-    import pandas as pd
-
+    hashes shift-invariant); sha256 would keep both."""
     from turbine_maintenance_etl_spark.llm.jpeg import encode_jpeg_baseline
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    # the doc_id projection of a small parquet arrives as ONE partition,
-    # which would serialize ~2 ms/image of pure-Python Huffman+DCT
-    # encode onto one core (measured: the whole 10s bench cost of this
-    # entry was the single-partition generator); one cheap shuffle of
-    # the 8-byte ids buys full-width codec parallelism
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                rows.append(
-                    {"doc_id": did,
-                     "media": encode_jpeg_baseline(px[:, :, None], quality=100)}
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    return encode_jpeg_baseline(_block_pixels(did // 2, did % 2)[:, :, None], quality=100)
 
 
 @register(
     "dedup_audio_fingerprint",
-    """
-    WITH base AS (
+    _audio_oracle("""
+    base AS (
         SELECT doc_id, doc_id // 2 AS g, doc_id % 2 AS v FROM documents),
     samp AS (
         SELECT doc_id, i, i // 10 AS k,
                ABS((g * 7 + i * 13) % 2003 - 1001) * (1 + v) AS a
-        FROM base, generate_series(0, 559) AS t(i)),
-    wins AS (
-        SELECT doc_id, k, SUM(a) AS wa FROM samp GROUP BY doc_id, k),
-    tot AS (
-        SELECT doc_id, SUM(wa) AS ta FROM wins GROUP BY doc_id),
-    fp AS (
-        SELECT w.doc_id,
-               CAST(SUM(CASE WHEN w.wa * 56 > t.ta
-                        THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS afp
-        FROM wins w JOIN tot t USING (doc_id) GROUP BY w.doc_id)
-    SELECT doc_id, afp, CAST(560 AS BIGINT) AS n_frames,
-           doc_id = MIN(doc_id) OVER (PARTITION BY afp) AS survivor
-    FROM fp
-    """,
+        FROM base, generate_series(0, 559) AS t(i))"""),
 )
-def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_audio_proof
+def dedup_audio_fingerprint(did: int) -> bytes:
     """AUDIO dedup via energy-envelope fingerprint — the audio member of
     the perceptual dedup family (llm/multimodal.py:audio_fingerprint).
     Every document gets a deterministic synthetic mono PCM16 WAV (560
@@ -2205,49 +2252,16 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure integer arithmetic — bit-exact, because PCM16 quantization is
     the identity for these amplitudes and the envelope compare is
     integer on both sides."""
-    import struct as _struct
-
-    import numpy as np
-    import pandas as pd
-
-    from turbine_maintenance_etl_spark.llm.multimodal import audio_fingerprint
-
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                i = np.arange(560, dtype=np.int64)
-                s = ((g * 7 + i * 13) % 2003 - 1001) * (1 + v)
-                raw = s.astype("<i2").tobytes()
-                fmt = _struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + _struct.pack("<I", len(raw)) + raw
-                )
-                wav = b"RIFF" + _struct.pack("<I", len(body)) + body
-                rows.append({"doc_id": did, "media": wav})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    fp = audio_fingerprint(media)
-    w = Window.partitionBy("afp")
-    return fp.select(
-        "doc_id",
-        "afp",
-        "n_frames",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
-    )
+    g, v = did // 2, did % 2
+    i = np.arange(560, dtype=np.int64)
+    s = ((g * 7 + i * 13) % 2003 - 1001) * (1 + v)
+    return _mono16k_wav(1, 16, s.astype("<i2").tobytes())
 
 
 @register(
     "dedup_audio_fingerprint_adpcm",
-    """
-    WITH base AS (
+    _audio_oracle("""
+    base AS (
         SELECT doc_id, doc_id // 2 AS g, doc_id % 2 AS v FROM documents),
     cfg AS (
         SELECT doc_id, g, v,
@@ -2258,22 +2272,10 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     samp AS (
         SELECT doc_id, i, i // 10 AS k,
                CASE WHEN i < b THEN ABS(p0) ELSE ABS(p1) END AS a
-        FROM cfg, generate_series(0, 559) AS t(i)),
-    wins AS (
-        SELECT doc_id, k, SUM(a) AS wa FROM samp GROUP BY doc_id, k),
-    tot AS (
-        SELECT doc_id, SUM(wa) AS ta FROM wins GROUP BY doc_id),
-    fp AS (
-        SELECT w.doc_id,
-               CAST(SUM(CASE WHEN w.wa * 56 > t.ta
-                        THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS afp
-        FROM wins w JOIN tot t USING (doc_id) GROUP BY w.doc_id)
-    SELECT doc_id, afp, CAST(560 AS BIGINT) AS n_frames,
-           doc_id = MIN(doc_id) OVER (PARTITION BY afp) AS survivor
-    FROM fp
-    """,
+        FROM cfg, generate_series(0, 559) AS t(i))"""),
 )
-def dedup_audio_fingerprint_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_audio_proof
+def dedup_audio_fingerprint_adpcm(did: int) -> bytes:
     """The ADPCM container proof (r8 session 3): piecewise-CONSTANT
     signals code to all-zero nibbles in both ADPCM families (IMA: step
     7>>3 = 0 with the index pinned at 0; MS: the cycled predictors 0/1
@@ -2287,101 +2289,52 @@ def dedup_audio_fingerprint_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame
     separately by the audioop differentials in tests/test_wav_adpcm.py.
     v=0 carries the native ADPCM container by g%3 (IMA / MS / plain
     PCM16), v=1 the same decoded values as PCM16 — cross-format dedup
-    again. Scale shape unchanged: one Arrow-batched map, 8-byte
-    fingerprint shuffle, never samples."""
-    import numpy as np
-    import pandas as pd
-
+    again."""
     from turbine_maintenance_etl_spark.llm.adpcm import (
         encode_wav_adpcm,
         encode_wav_ms_adpcm,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        audio_fingerprint,
-        encode_wav,
-    )
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_wav
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                p0 = ((g * 131) % 2003) - 1001
-                p1 = ((g * 57 + 7) % 2003) - 1001
-                fmt = g % 3
-                boundary = 500 if fmt == 1 else 505
-                vals = np.where(np.arange(560) < boundary, p0, p1)
-                x = (vals / 32768.0).astype(np.float32)[:, None]
-                if v == 1 or fmt == 2:
-                    wav = encode_wav(x, 16000)
-                elif fmt == 0:
-                    wav = encode_wav_adpcm(x, 16000)
-                else:
-                    wav = encode_wav_ms_adpcm(x, 16000, 500)
-                rows.append({"doc_id": did, "media": wav})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    fp = audio_fingerprint(media)
-    w = Window.partitionBy("afp")
-    return fp.select(
-        "doc_id",
-        "afp",
-        "n_frames",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
-    )
+    g, v = did // 2, did % 2
+    p0 = ((g * 131) % 2003) - 1001
+    p1 = ((g * 57 + 7) % 2003) - 1001
+    fmt = g % 3
+    boundary = 500 if fmt == 1 else 505
+    vals = np.where(np.arange(560) < boundary, p0, p1)
+    x = (vals / 32768.0).astype(np.float32)[:, None]
+    if v == 1 or fmt == 2:
+        return encode_wav(x, 16000)
+    if fmt == 0:
+        return encode_wav_adpcm(x, 16000)
+    return encode_wav_ms_adpcm(x, 16000, 500)
 
 
 @register("dedup_image_phash_jpeg_lossless", _JPEG_PHASH_ORACLE)
-def dedup_image_phash_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash_jpeg_lossless(did: int) -> bytes:
     """The LOSSLESS-JPEG proof (r8 session 3, T.81 Annex H — the mode
     DICOM archives use): a format-mixed corpus where even groups carry
     baseline SOF0 (q100 block-constant, bit-exact) and odd groups carry
     SOF3 lossless with the PREDICTOR CYCLING 1..7 by group — lossless
     decode is exact for ANY pixels, so every container decodes to the
     same formula values and the shared DuckDB twin grades the whole
-    path value-for-value. Scale shape unchanged: one Arrow-batched map
-    over the binary column, 8-byte hash shuffle, never pixels."""
-    import numpy as np
-    import pandas as pd
-
+    path value-for-value."""
     from turbine_maintenance_etl_spark.llm.jpeg import (
         encode_jpeg_baseline,
         encode_jpeg_lossless,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                if g % 2 == 0:
-                    data = encode_jpeg_baseline(px[:, :, None], quality=100)
-                else:
-                    data = encode_jpeg_lossless(
-                        px[:, :, None], 8, predictor=(g // 2) % 7 + 1
-                    )
-                rows.append({"doc_id": did, "media": data})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    g = did // 2
+    px = _block_pixels(g, did % 2)[:, :, None]
+    if g % 2 == 0:
+        return encode_jpeg_baseline(px, quality=100)
+    return encode_jpeg_lossless(px, 8, predictor=(g // 2) % 7 + 1)
 
 
 @register("dedup_image_phash_png_formats", _JPEG_PHASH_ORACLE)
-def dedup_image_phash_png_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash_png_formats(did: int) -> bytes:
     """The full-PNG-surface proof (r8 session 3): a four-way
     format-mixed corpus — each image encoded 8-bit grayscale, 4-bit
     PALETTE (gray triples, llm/png.py), 16-BIT grayscale (v*257, whose
@@ -2390,97 +2343,46 @@ def dedup_image_phash_png_formats(spark: SparkSession, sf_dir: str) -> DataFrame
     pixels by construction, so the SAME DuckDB twin that grades the
     JPEG entries grades this one value-for-value; the PNG surface is
     additionally cross-checked against the JVM's javax.imageio codec
-    in tests/test_png_full.py. Scale shape unchanged: one Arrow-batched
-    map over the binary column, 8-byte hash shuffle, never pixels."""
-    import numpy as np
-    import pandas as pd
-
-    from turbine_maintenance_etl_spark.llm.multimodal import (
-        encode_png,
-        image_phash,
-        phash_dedup,
-    )
+    in tests/test_png_full.py."""
+    from turbine_maintenance_etl_spark.llm.multimodal import encode_png
     from turbine_maintenance_etl_spark.llm.png import encode_png_extended
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                mode = g % 4
-                if mode == 0:  # plain 8-bit grayscale
-                    data = encode_png(px[:, :, None])
-                elif mode == 1:  # 4-bit palette (<= 6 distinct values)
-                    vals = np.unique(px)
-                    idx = np.searchsorted(vals, px).astype(np.uint16)
-                    plte = np.stack([vals, vals, vals], 1).astype(np.uint8)
-                    data = encode_png_extended(idx, 4, 3, palette=plte)
-                elif mode == 2:  # 16-bit grayscale, high byte == v
-                    data = encode_png_extended(
-                        px.astype(np.uint16) * 257, 16, 0
-                    )
-                else:  # 8-bit grayscale, ADAM7 interlaced
-                    data = encode_png_extended(
-                        px.astype(np.uint16), 8, 0, interlace=1
-                    )
-                rows.append({"doc_id": did, "media": data})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    g = did // 2
+    px = _block_pixels(g, did % 2)
+    mode = g % 4
+    if mode == 0:  # plain 8-bit grayscale
+        return encode_png(px[:, :, None])
+    if mode == 1:  # 4-bit palette (<= 6 distinct values)
+        vals = np.unique(px)
+        idx = np.searchsorted(vals, px).astype(np.uint16)
+        plte = np.stack([vals, vals, vals], 1).astype(np.uint8)
+        return encode_png_extended(idx, 4, 3, palette=plte)
+    if mode == 2:  # 16-bit grayscale, high byte == v
+        return encode_png_extended(px.astype(np.uint16) * 257, 16, 0)
+    # 8-bit grayscale, ADAM7 interlaced
+    return encode_png_extended(px.astype(np.uint16), 8, 0, interlace=1)
 
 
 @register("dedup_image_phash_gif", _JPEG_PHASH_ORACLE)
-def dedup_image_phash_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash_gif(did: int) -> bytes:
     """The GIF proof (r8 session 3, llm/gif.py): each image carried as
     a real GIF89a — LZW-compressed indices into a GRAY palette (r=g=b,
     so the integer-mean grayscale is the identity), INTERLACED for odd
     groups — decodes to the exact formula pixels, so the shared phash
     twin grades the LZW decoder, palette lookup and interlace
     reassembly value-for-value; the codec is additionally
-    cross-checked against javax.imageio in tests/test_gif_codec.py.
-    Scale shape unchanged: one Arrow-batched map, 8-byte hash shuffle,
-    never pixels."""
-    import numpy as np
-    import pandas as pd
-
+    cross-checked against javax.imageio in tests/test_gif_codec.py."""
     from turbine_maintenance_etl_spark.llm.gif import encode_gif
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                vals = np.unique(px)
-                idx = np.searchsorted(vals, px)
-                size = max(2, 1 << int(len(vals) - 1).bit_length())
-                pal = np.zeros((size, 3), dtype=np.uint8)
-                pal[: len(vals)] = np.stack([vals, vals, vals], 1)
-                rows.append({
-                    "doc_id": did,
-                    "media": encode_gif([idx], pal, interlace=bool(g % 2)),
-                })
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    g = did // 2
+    px = _block_pixels(g, did % 2)
+    vals = np.unique(px)
+    idx = np.searchsorted(vals, px)
+    size = max(2, 1 << int(len(vals) - 1).bit_length())
+    pal = np.zeros((size, 3), dtype=np.uint8)
+    pal[: len(vals)] = np.stack([vals, vals, vals], 1)
+    return encode_gif([idx], pal, interlace=bool(g % 2))
 
 
 def _g711_oracle() -> str:
@@ -2491,32 +2393,20 @@ def _g711_oracle() -> str:
 
     ul = "[" + ", ".join(str(int(v)) for v in ULAW_TABLE) + "]"
     al = "[" + ", ".join(str(int(v)) for v in ALAW_TABLE) + "]"
-    return f"""
-    WITH base AS (
+    return _audio_oracle(f"""
+    base AS (
         SELECT doc_id, doc_id // 2 AS g FROM documents),
     samp AS (
         SELECT doc_id, i, i // 10 AS k,
                ABS(CASE WHEN g % 2 = 0
                    THEN {ul}[(g * 7 + i * 13) % 256 + 1]
                    ELSE {al}[(g * 7 + i * 13) % 256 + 1] END) AS a
-        FROM base, generate_series(0, 559) AS t(i)),
-    wins AS (
-        SELECT doc_id, k, SUM(a) AS wa FROM samp GROUP BY doc_id, k),
-    tot AS (
-        SELECT doc_id, SUM(wa) AS ta FROM wins GROUP BY doc_id),
-    fp AS (
-        SELECT w.doc_id,
-               CAST(SUM(CASE WHEN w.wa * 56 > t.ta
-                        THEN (1::BIGINT << k) ELSE 0 END) AS BIGINT) AS afp
-        FROM wins w JOIN tot t USING (doc_id) GROUP BY w.doc_id)
-    SELECT doc_id, afp, CAST(560 AS BIGINT) AS n_frames,
-           doc_id = MIN(doc_id) OVER (PARTITION BY afp) AS survivor
-    FROM fp
-    """
+        FROM base, generate_series(0, 559) AS t(i))""")
 
 
 @register("dedup_audio_fingerprint_g711", _g711_oracle())
-def dedup_audio_fingerprint_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_audio_proof
+def dedup_audio_fingerprint_g711(did: int) -> bytes:
     """CROSS-FORMAT audio dedup (r8 session 3): the same audio stored
     as G.711 telephony bytes and as PCM16 must fingerprint identically
     and dedup together — the realistic mixed-corpus scenario. Each
@@ -2527,55 +2417,17 @@ def dedup_audio_fingerprint_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact by construction (every sample is a table value; the
     envelope's *32768 rint recovers the int16 exactly), so the DuckDB
     twin — which embeds both 256-entry decode tables as list literals —
-    grades the whole path bit-for-bit. Scale shape unchanged: one
-    Arrow-batched map over the binary column, 8-byte fingerprint
-    shuffle, never samples."""
-    import struct as _struct
-
-    import numpy as np
-    import pandas as pd
-
+    grades the whole path bit-for-bit."""
     from turbine_maintenance_etl_spark.llm.g711 import ALAW_TABLE, ULAW_TABLE
-    from turbine_maintenance_etl_spark.llm.multimodal import audio_fingerprint
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                i = np.arange(560, dtype=np.int64)
-                codes = ((g * 7 + i * 13) % 256).astype(np.uint8)
-                ulaw = g % 2 == 0
-                if v == 0:  # raw G.711 codewords
-                    raw = codes.tobytes()
-                    fmt = _struct.pack(
-                        "<HHIIHH", 0x07 if ulaw else 0x06, 1, 16000, 16000, 1, 8
-                    )
-                else:  # the SAME decoded values, PCM16 container
-                    table = ULAW_TABLE if ulaw else ALAW_TABLE
-                    raw = table[codes].astype("<i2").tobytes()
-                    fmt = _struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + _struct.pack("<I", len(raw)) + raw
-                )
-                wav = b"RIFF" + _struct.pack("<I", len(body)) + body
-                rows.append({"doc_id": did, "media": wav})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    fp = audio_fingerprint(media)
-    w = Window.partitionBy("afp")
-    return fp.select(
-        "doc_id",
-        "afp",
-        "n_frames",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("survivor"),
-    )
+    g, v = did // 2, did % 2
+    i = np.arange(560, dtype=np.int64)
+    codes = ((g * 7 + i * 13) % 256).astype(np.uint8)
+    ulaw = g % 2 == 0
+    if v == 1:  # the SAME decoded values, PCM16 container
+        pcm = (ULAW_TABLE if ulaw else ALAW_TABLE)[codes]
+        return _mono16k_wav(1, 16, pcm.astype("<i2").tobytes())
+    return _mono16k_wav(0x07 if ulaw else 0x06, 8, codes.tobytes())  # raw codewords
 
 
 _VIDEO_SIG_ORACLE = """
@@ -2607,6 +2459,14 @@ _VIDEO_SIG_ORACLE = """
     """
 
 
+def _video_pixels(vg: int, v: int, fi: int) -> np.ndarray:
+    """Frame fi of video group vg as a 16x18 grayscale image, shifted
+    +2v for the odd twin — the formula _VIDEO_SIG_ORACLE recomputes."""
+    r = np.arange(16)[:, None]
+    c = np.arange(18)[None, :]
+    return ((vg * 41 + fi * 13 + r * 11 + c * 7) % 250 + v * 2).astype(np.uint8)
+
+
 @register("dedup_video_frames", _VIDEO_SIG_ORACLE)
 def dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VIDEO dedup via frame-sampled perceptual signatures
@@ -2620,7 +2480,6 @@ def dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     video -> min-id survivor per signature. The DuckDB twin recomputes
     frame dHashes from the pixel formula + resize index map and the
     identical string fold — md5-exact across engines."""
-    import numpy as np
     import pandas as pd
 
     from turbine_maintenance_etl_spark.llm.multimodal import (
@@ -2643,12 +2502,7 @@ def dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for _, rr in pdf.iterrows():
                 vid, fi = int(rr["video_id"]), int(rr["frame_idx"])
-                vg, v = vid // 2, vid % 2
-                r = np.arange(16)[:, None]
-                c = np.arange(18)[None, :]
-                px = ((vg * 41 + fi * 13 + r * 11 + c * 7) % 250 + v * 2).astype(
-                    np.uint8
-                )
+                px = _video_pixels(vid // 2, vid % 2, fi)
                 rows.append(
                     {"video_id": vid, "frame_idx": fi, "media": encode_png(px[:, :, None])}
                 )
@@ -2671,7 +2525,6 @@ def dedup_video_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is graded by the IDENTICAL DuckDB twin, md5-exact. Scale
     shape: container bytes cross Arrow once and fan out to frame rows;
     the signature fold shuffles 8-byte hashes, never pixels."""
-    import numpy as np
     import pandas as pd
 
     from turbine_maintenance_etl_spark.llm.avi import (
@@ -2694,14 +2547,10 @@ def dedup_video_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = []
             for did in pdf["doc_id"]:
                 vid = int(did)
-                vg, v = vid // 2, vid % 2
-                frames = []
-                for fi in range(10):
-                    r = np.arange(16)[:, None]
-                    c = np.arange(18)[None, :]
-                    px = ((vg * 41 + fi * 13 + r * 11 + c * 7) % 250
-                          + v * 2).astype(np.uint8)
-                    frames.append(encode_jpeg_lossless(px[:, :, None]))
+                frames = [
+                    encode_jpeg_lossless(_video_pixels(vid // 2, vid % 2, fi)[:, :, None])
+                    for fi in range(10)
+                ]
                 rows.append(
                     {"video_id": vid, "media": encode_avi_mjpeg(frames, 18, 16)}
                 )
@@ -3167,7 +3016,8 @@ def pipeline_chunk_embed_retrieval(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 @register("dedup_image_phash_jpeg_progressive", _JPEG_PHASH_ORACLE)
-def dedup_image_phash_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash_jpeg_progressive(did: int) -> bytes:
     """The round-8 companion to dedup_image_phash_jpeg: a FORMAT-MIXED
     corpus — each image encoded baseline (even group) or PROGRESSIVE
     SOF2 (odd group, spectral-selection + successive-approximation
@@ -3176,41 +3026,20 @@ def dedup_image_phash_jpeg_progressive(spark: SparkSession, sf_dir: str) -> Data
     under the driver's oracle. Pixels are identical to the baseline
     entry (q100 block-constant -> decode is BIT-exact in both modes:
     progressive transmits the same quantized coefficients), so the SAME
-    DuckDB twin grades both entries value-for-value. Scale shape
-    unchanged: one Arrow-batched map over the binary column, 8-byte
-    hash shuffle, never pixels."""
-    import numpy as np
-    import pandas as pd
-
+    DuckDB twin grades both entries value-for-value."""
     from turbine_maintenance_etl_spark.llm.jpeg import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                enc = encode_jpeg_baseline if g % 2 == 0 else encode_jpeg_progressive
-                rows.append({"doc_id": did, "media": enc(px[:, :, None], quality=100)})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    g = did // 2
+    enc = encode_jpeg_baseline if g % 2 == 0 else encode_jpeg_progressive
+    return enc(_block_pixels(g, did % 2)[:, :, None], quality=100)
 
 
 @register("dedup_image_phash_jpeg_arith", _JPEG_PHASH_ORACLE)
-def dedup_image_phash_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_image_proof
+def dedup_image_phash_jpeg_arith(did: int) -> bytes:
     """The round-8 ARITHMETIC-coding companion: a four-way format-mixed
     corpus — each image encoded baseline SOF0, progressive SOF2,
     extended-sequential ARITHMETIC SOF9, or progressive ARITHMETIC
@@ -3222,12 +3051,7 @@ def dedup_image_phash_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q100 block-constant -> decode is bit-exact in every mode), so the
     SAME DuckDB twin grades all three JPEG entries value-for-value; the
     arithmetic paths are additionally interop-pinned against the system
-    libjpeg in tests/test_jpeg_arith.py. Scale shape unchanged: one
-    Arrow-batched map over the binary column, 8-byte hash shuffle,
-    never pixels."""
-    import numpy as np
-    import pandas as pd
-
+    libjpeg in tests/test_jpeg_arith.py."""
     from turbine_maintenance_etl_spark.llm.jpeg import (
         encode_jpeg_baseline,
         encode_jpeg_progressive,
@@ -3236,30 +3060,14 @@ def dedup_image_phash_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_arith,
         encode_jpeg_progressive_arith,
     )
-    from turbine_maintenance_etl_spark.llm.multimodal import image_phash, phash_dedup
 
-    docs = ensure_parallelism(_t(spark, sf_dir, "documents").select("doc_id"))
-
-    def gen(it):
-        encoders = (
-            lambda px: encode_jpeg_baseline(px, quality=100),
-            lambda px: encode_jpeg_progressive(px, quality=100),
-            # non-default DAC conditioning: entropy changes, values must not
-            lambda px: encode_jpeg_arith(px, quality=100, dc_cond=(0, 2), ac_kx=3),
-            lambda px: encode_jpeg_progressive_arith(px, quality=100),
-        )
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g, v = did // 2, did % 2
-                br = np.arange(16)[:, None] // 8
-                bc = np.arange(24)[None, :] // 8
-                px = ((g * 37 + br * 29 + bc * 13) % 200 + v).astype(np.uint8)
-                rows.append({"doc_id": did, "media": encoders[g % 4](px[:, :, None])})
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    media = docs.mapInPandas(gen, schema="doc_id bigint, media binary")
-    return phash_dedup(image_phash(media)).select(
-        "doc_id", "dhash", "ahash", "survivor"
-    )
+    g = did // 2
+    px = _block_pixels(g, did % 2)[:, :, None]
+    mode = g % 4
+    if mode == 0:
+        return encode_jpeg_baseline(px, quality=100)
+    if mode == 1:
+        return encode_jpeg_progressive(px, quality=100)
+    if mode == 2:  # non-default DAC conditioning: entropy changes, values must not
+        return encode_jpeg_arith(px, quality=100, dc_cond=(0, 2), ac_kx=3)
+    return encode_jpeg_progressive_arith(px, quality=100)
