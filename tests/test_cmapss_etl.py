@@ -444,30 +444,89 @@ def test_variable_sensor_intersection_rejects_empty_dataset(spark, tmp_path):
 def test_constant_columns_plan_has_no_expand(spark):
     """The constant-sensor pass must stay one plain aggregate — N
     countDistincts rewrite through an Expand that replicates every row
-    N times into the shuffle."""
-    from tests.conftest import make_cmapss_pdf
-    from turbine_maintenance_etl_spark.features.engine import constant_columns
-    from turbine_maintenance_etl_spark.schema.cmapss import sensor_columns
+    N times into the shuffle. The plan checked is the stats frame
+    ``constant_columns`` itself collects."""
+    from turbine_maintenance_etl_spark.features.engine import _constant_stats
 
     df = spark.createDataFrame(make_cmapss_pdf(n_units=3, seed=5))
     sensors = sensor_columns(df.columns)
-    agg = df.agg(
-        *[f for c in sensors for f in (
-            __import__("pyspark.sql.functions", fromlist=["min"]).min(c).alias(f"_mn_{c}"),
-        )]
-    )
     # behavioral check: detection result matches countDistinct semantics
-    import pyspark.sql.functions as F
-
     want = [
         c for c in sensors
         if df.agg(F.countDistinct(c)).first()[0] <= 1
     ]
     assert constant_columns(df, sensors) == want
     # plan check: the production pass contains no Expand
-    probe = df.agg(
-        *[f for c in sensors for f in (
-            F.min(c).alias(f"a_{c}"), F.max(c).alias(f"b_{c}"), F.count(c).alias(f"c_{c}"),
-        )]
+    plan = _constant_stats(df, sensors)._jdf.queryExecution().executedPlan().toString()
+    assert "Expand" not in plan
+
+
+def test_constant_columns_quotes_arbitrary_names(spark):
+    """Column names are quoted into the SQL text, not spliced: a space
+    and an embedded backtick each stay one identifier, and the answer is
+    ``nunique(dropna=True) <= 1`` per column."""
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1.0, 1.0, 3, 7), (1.0, 2.0, 3, 7), (nan, None, 3, 8), (None, 2.0, 3, 9)],
+        "`a b` double, `x``y` double, `c``` int, `p.q` int",
     )
-    assert "Expand" not in probe._jdf.queryExecution().executedPlan().toString()
+    assert constant_columns(df, df.columns) == ["a b", "c`"]
+
+
+def test_build_features_quotes_partition_and_order_names(cmapss_sdf):
+    """``partition_cols``/``order_col`` with a space or a backtick give
+    the same feature table as the plain names."""
+    sensors = ["sensor2", "sensor3"]
+    want = build_features(cmapss_sdf, sensors=sensors)
+    odd = cmapss_sdf.withColumnsRenamed({"unit_nr": "unit nr", "time_cycles": "t`c"})
+    got = build_features(
+        odd, sensors=sensors, partition_cols=("dataset", "unit nr"), order_col="t`c"
+    ).withColumnsRenamed({"unit nr": "unit_nr", "t`c": "time_cycles"})
+    assert got.columns == want.columns
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def _round_trips(monkeypatch, spark, build) -> int:
+    """py4j commands ``build()`` sends. Only this thread's are counted:
+    py4j's finalizer thread releases collected Java objects through the
+    same client at times of its own."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(threading.get_ident() == me)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    try:
+        build()
+    finally:
+        monkeypatch.undo()
+    return sum(calls)
+
+
+def test_batch_frame_construction_does_not_grow_with_sensors(spark, monkeypatch, tmp_path):
+    """Building (not running) the scan, the constant-sensor stats frame
+    and the feature table costs about the same number of py4j round
+    trips for 14 sensors as for 4: each wide projection is shipped as SQL
+    text in one call. Built a Column per expression, the 40 extra feature
+    expressions alone cost ~2,000 more."""
+    from turbine_maintenance_etl_spark.features.engine import _constant_stats
+
+    path = str(tmp_path / "train_FD001.txt")
+    write_cmapss_txt(make_cmapss_pdf(n_units=2, seed=3), path)
+
+    def build(k):
+        raw = read_cmapss_text(spark, path, dataset="FD001")
+        sensors = sensor_columns(raw.columns)[:k]
+        _constant_stats(raw, sensors)
+        build_features(raw, sensors=sensors)
+
+    build(4)  # first use of the JVM classes involved
+    few = _round_trips(monkeypatch, spark, lambda: build(4))
+    many = _round_trips(monkeypatch, spark, lambda: build(14))
+    assert many - few <= 20, (few, many)

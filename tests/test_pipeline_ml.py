@@ -101,6 +101,38 @@ def test_ml_train_and_score(spark, etl_setup):
     assert row["rmse"] >= row["avg_absolute_error"] - 1e-9
 
 
+def test_evaluate_equals_three_evaluator_passes(spark):
+    """``evaluate`` reads RMSE, MAE and R² off one RegressionMetrics pass;
+    each equals (==, not approx) its own RegressionEvaluator job on a
+    multi-partition frame."""
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    from turbine_maintenance_etl_spark.ml.pipeline import evaluate
+
+    df = spark.range(0, 3000, 1, 4).selectExpr(
+        "CAST(id % 97 AS INT) AS rul", "id % 97 + 7.3 * sin(id) + 0.1 AS prediction"
+    )
+    assert df.rdd.getNumPartitions() >= 2
+    want = {
+        m: RegressionEvaluator(labelCol="rul", predictionCol="prediction", metricName=m)
+        .evaluate(df)
+        for m in ("rmse", "mae", "r2")
+    }
+    assert evaluate(df) == want
+
+
+def test_predictions_table_literals_round_trip(spark, etl_setup):
+    """Model name, version and feature names are SQL string literals in
+    the projection: quotes and backslashes come back unchanged."""
+    _, res = etl_setup
+    scored = res.features.limit(3).withColumn("prediction", F.lit(1.0))
+    name, version, feats = "o'brien\\lr", "1.0'\\n", ["a'b", "c\\d"]
+    row = predictions_table(scored, name, feats, version).first()
+    assert (row["model_name"], row["model_version"], row["features_used"]) == (
+        name, version, feats
+    )
+
+
 def test_ml_models_tree(spark, etl_setup):
     """Tree models fit and beat a constant predictor on training data."""
     _, res = etl_setup

@@ -25,12 +25,38 @@ The unified output resolves the reference's dbt-vs-Python column split
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from turbine_maintenance_etl_spark.schema.cmapss import sensor_columns
+from turbine_maintenance_etl_spark.util import quote_ident, select_sql
 
 KEY_COLS = ("dataset", "unit_nr", "time_cycles")
+
+
+def _constant_stats(df: DataFrame, candidates: list[str]) -> DataFrame:
+    """The one-row (min, max, count) frame ``constant_columns`` collects:
+    ``_mn_<c>``, ``_mx_<c>``, ``_n_<c>`` per candidate, NaN counted as
+    NULL on float columns."""
+    from pyspark.sql.types import DoubleType, FloatType
+
+    aggs = []
+    for c in candidates:
+        v = quote_ident(c)
+        # dropna parity for float columns (r10 review): pandas nunique
+        # (dropna=True) DROPS NaN, but Spark's min/max rank it greatest,
+        # so {5.0, NaN} read as two values (mn=5.0, mx=NaN) and a
+        # one-real-value-plus-NaN sensor was kept where the reference
+        # drops it. Nullifying NaN up front makes min/max skip it
+        # exactly like NULL.
+        if isinstance(df.schema[c].dataType, (FloatType, DoubleType)):
+            v = f"CASE WHEN NOT isnan({v}) THEN {v} END"
+        aggs += [
+            f"min({v}) AS {quote_ident(f'_mn_{c}')}",
+            f"max({v}) AS {quote_ident(f'_mx_{c}')}",
+            f"count({v}) AS {quote_ident(f'_n_{c}')}",
+        ]
+    return select_sql(df, aggs)
 
 
 def constant_columns(df: DataFrame, candidates: list[str]) -> list[str]:
@@ -45,28 +71,7 @@ def constant_columns(df: DataFrame, candidates: list[str]) -> list[str]:
     ignored) is exactly ``nunique(dropna=True) <= 1``."""
     if not candidates:
         return []
-    from pyspark.sql.types import DoubleType, FloatType
-
-    def _nan_dropped(c: str):
-        # dropna parity for float columns (r10 review): pandas nunique
-        # (dropna=True) DROPS NaN, but Spark's min/max rank it greatest,
-        # so {5.0, NaN} read as two values (mn=5.0, mx=NaN) and a
-        # one-real-value-plus-NaN sensor was kept where the reference
-        # drops it. Nullifying NaN up front makes min/max skip it
-        # exactly like NULL.
-        if isinstance(df.schema[c].dataType, (FloatType, DoubleType)):
-            return F.when(~F.isnan(c), F.col(c))
-        return F.col(c)
-
-    aggs = []
-    for c in candidates:
-        v = _nan_dropped(c)
-        aggs += [
-            F.min(v).alias(f"_mn_{c}"),
-            F.max(v).alias(f"_mx_{c}"),
-            F.count(v).alias(f"_n_{c}"),
-        ]
-    row = df.agg(*aggs).collect()[0]
+    row = _constant_stats(df, candidates).collect()[0]
 
     def _const(c: str) -> bool:
         # count==0: all values were NULL or NaN -> nunique(dropna)==0
@@ -112,19 +117,24 @@ def variable_sensor_intersection(dfs: dict[str, DataFrame]) -> list[str]:
     return sorted(kept or [], key=lambda c: int(c.removeprefix("sensor")))
 
 
-def rul_expr(order_col: str, over) -> Column:
+def rul_expr(order_col: str, over: str) -> str:
     """The single RUL definition (per-partition max cycle minus current
     cycle, int) shared by ``add_rul`` and ``build_features`` — one
     place to change if the semantics ever move (r10 review: the
-    expression previously lived in both, free to drift)."""
-    return (F.max(order_col).over(over) - F.col(order_col)).cast("int")
+    expression previously lived in both, free to drift). SQL text;
+    ``over`` is the window's ``PARTITION BY ...`` clause."""
+    o = quote_ident(order_col)
+    return f"CAST(max({o}) OVER ({over}) - {o} AS INT)"
+
+
+def _partition_by(partition_cols: tuple[str, ...]) -> str:
+    return "PARTITION BY " + ", ".join(quote_ident(c) for c in partition_cols)
 
 
 def add_rul(df: DataFrame, partition_cols: tuple[str, ...] = ("dataset", "unit_nr")) -> DataFrame:
     """W1: remaining useful life = per-unit max cycle minus current cycle
     (scripts/etl_turbofan.py:22-24; fct_cycles_features.sql:23-26)."""
-    w = Window.partitionBy(*partition_cols)
-    return df.withColumn("rul", rul_expr("time_cycles", w))
+    return df.withColumn("rul", F.expr(rul_expr("time_cycles", _partition_by(partition_cols))))
 
 
 def build_features(
@@ -145,24 +155,33 @@ def build_features(
     if sensors is None:
         sensors = sensor_columns(df.columns)
 
-    ordered = Window.partitionBy(*partition_cols).orderBy(order_col)
-    unbounded = Window.partitionBy(*partition_cols)
+    # SQL text in one projection, not a Column per expression: each
+    # Column operator is a py4j round trip, while one parsed string is
+    # not (the measurement behind llm.text.tokens_sql); same analyzed plan.
+    unbounded = _partition_by(partition_cols)
+    ordered = f"{unbounded} ORDER BY {quote_ident(order_col)}"
 
-    exprs: list = [F.col(c) for c in df.columns if include_settings or not c.startswith("setting")]
-    exprs.append(rul_expr(order_col, unbounded).alias("rul"))
+    exprs = [
+        quote_ident(c) for c in df.columns if include_settings or not c.startswith("setting")
+    ]
+    exprs.append(f"{rul_expr(order_col, unbounded)} AS rul")
     for c in sensors:
+        q = quote_ident(c)
         for wlen in windows:
+            start = f"{wlen - 1} PRECEDING" if wlen != 1 else "CURRENT ROW"
             exprs.append(
-                F.avg(c).over(ordered.rowsBetween(-(wlen - 1), 0)).alias(f"mean{wlen}_{c}")
+                f"avg({q}) OVER ({ordered} ROWS BETWEEN {start} AND CURRENT ROW)"
+                f" AS {quote_ident(f'mean{wlen}_{c}')}"
             )
-        exprs.append((F.col(c) - F.lag(c, 1).over(ordered)).alias(f"d_{c}"))
+        exprs.append(f"{q} - lag({q}, 1) OVER ({ordered}) AS {quote_ident(f'd_{c}')}")
         # stddev_pop (ddof=0), NOT Spark's default sample stddev; NULLif
-        # guards zero-variance stretches -> NULL (SURVEY.md §7.4.2).
-        std = F.stddev_pop(c).over(unbounded)
+        # guards zero-variance stretches -> NULL (SURVEY.md §7.4.2). The
+        # 0.0D is a DOUBLE literal (a bare 0.0 parses as DECIMAL).
         exprs.append(
-            ((F.col(c) - F.avg(c).over(unbounded)) / F.nullif(std, F.lit(0.0))).alias(f"z_{c}")
+            f"({q} - avg({q}) OVER ({unbounded}))"
+            f" / nullif(stddev_pop({q}) OVER ({unbounded}), 0.0D) AS {quote_ident(f'z_{c}')}"
         )
-    return df.select(*exprs)
+    return select_sql(df, exprs)
 
 
 def units_summary(df: DataFrame, partition_cols: tuple[str, ...] = ("dataset", "unit_nr")) -> DataFrame:

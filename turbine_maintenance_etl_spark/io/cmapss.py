@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from turbine_maintenance_etl_spark.schema.cmapss import CMAPSS_COLS, _INT_COLS
+from turbine_maintenance_etl_spark.util import quote_ident, select_sql
 
 
 def read_cmapss_text(
@@ -31,7 +32,10 @@ def read_cmapss_text(
     scripts/etl_turbofan.py:56).
     """
     raw = spark.read.text(path)
-    arr = F.split(F.trim(F.col("value")), r"\s+")
+    # SQL text in one projection, not a Column per field: each Column
+    # operator is a py4j round trip, while one parsed string is not
+    # (the measurement behind llm.text.tokens_sql); same analyzed plan.
+    token = r"try_element_at(split(trim(value), '\\s+'), {})"
     cols = []
     for i, name in enumerate(CMAPSS_COLS):
         # try_cast to DOUBLE first: failure -> NULL under ANY session
@@ -41,11 +45,11 @@ def read_cmapss_text(
         # astype(int)), while NaN/Infinity/overflow tokens go NULL —
         # a plain cast would CRASH under ANSI (breaking the 'NULL under
         # ANY session' promise) and silently emit 0/2147483647 without.
-        num = F.try_element_at(arr, F.lit(i + 1)).try_cast("double")
+        num = f"try_cast({token.format(i + 1)} AS DOUBLE)"
         if name in _INT_COLS:
-            num = num.try_cast("int")
-        cols.append(num.alias(name))
-    df = raw.where(F.trim(F.col("value")) != "").select(*cols)
+            num = f"try_cast({num} AS INT)"
+        cols.append(f"{num} AS {quote_ident(name)}")
+    df = select_sql(raw.where("trim(value) != ''"), cols)
     if dataset is not None:
         df = df.withColumn("dataset", F.lit(dataset))
     return df

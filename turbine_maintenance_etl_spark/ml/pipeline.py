@@ -27,7 +27,12 @@ from pyspark.ml.regression import (
     RandomForestRegressor,
 )
 
-from turbine_maintenance_etl_spark.util import strip_training_summary
+from turbine_maintenance_etl_spark.util import (
+    quote_ident,
+    quote_string,
+    select_sql,
+    strip_training_summary,
+)
 
 NON_FEATURE_COLS = {"unit_nr", "time_cycles", "dataset", "rul", "rul_true"}
 
@@ -107,23 +112,21 @@ def make_pipeline(feature_cols: list[str], model_name: str = "linear_regression"
 
 
 def evaluate(predictions: DataFrame, label_col: str = "rul") -> dict[str, float]:
-    """RMSE / MAE / R² (reference metrics, scripts/ml_pipeline.py:287-289).
+    """RMSE / MAE / R² (reference metrics, scripts/ml_pipeline.py:287-289)
+    from ONE pass over the predictions, which usually arrive lazy (the
+    full Imputer→Assembler→Scaler→model scoring lineage).
 
-    The predictions frame is persisted across the three evaluator
-    passes (r10 review): it usually arrives LAZY — the full
-    Imputer→Assembler→Scaler→model scoring lineage — and each
-    RegressionEvaluator.evaluate is its own job, so un-persisted the
-    ensemble scores three times for one metric dict."""
-    pred = predictions.persist()
-    try:
-        return {
-            metric: RegressionEvaluator(
-                labelCol=label_col, predictionCol="prediction", metricName=metric
-            ).evaluate(pred)
-            for metric in ("rmse", "mae", "r2")
-        }
-    finally:
-        pred.unpersist()
+    ``RegressionEvaluator.evaluate`` reads one metric off the JVM
+    ``mllib.evaluation.RegressionMetrics`` summary it builds per call;
+    the evaluator's public ``getMetrics`` returns that summary, so all
+    three metrics come from one aggregation job with the evaluator's own
+    arithmetic."""
+    ev = RegressionEvaluator(labelCol=label_col, predictionCol="prediction")
+    # the Python wrapper does not expose getMetrics: push the params and
+    # call it on the wrapped JVM evaluator, as evaluate() does internally
+    ev._transfer_params_to_java()  # noqa: SLF001
+    m = ev._java_obj.getMetrics(predictions._jdf)  # noqa: SLF001
+    return {"rmse": m.rootMeanSquaredError(), "mae": m.meanAbsoluteError(), "r2": m.r2()}
 
 
 def clamp_predictions(predictions: DataFrame) -> DataFrame:
@@ -194,24 +197,25 @@ def predictions_table(
     (``ensemble_confidence``); otherwise NULL — which is all the
     reference ever writes (scripts/ml_pipeline_gpu.py:1016)."""
     conf = (
-        F.col("confidence_score").cast("double")
+        "CAST(confidence_score AS DOUBLE)"
         if "confidence_score" in scored.columns
-        else F.lit(None).cast("double")
+        else "CAST(NULL AS DOUBLE)"
     )
-    return scored.select(
-        F.monotonically_increasing_id().alias("id"),
-        F.col("unit_nr").cast("int").alias("unit_nr"),
-        F.col("time_cycles").cast("int").alias("cycle"),
-        F.col("dataset").cast("string").alias("dataset"),
-        F.lit(model_name).alias("model_name"),
-        F.col("prediction").cast("double").alias("predicted_rul"),
-        F.col(label_col).cast("double").alias("actual_rul"),
-        F.current_timestamp().alias("prediction_date"),
-        F.lit(model_version).alias("model_version"),
-        conf.alias("confidence_score"),
-        F.array(*[F.lit(c) for c in feature_cols[:10]]).alias("features_used"),
-        F.current_timestamp().alias("created_at"),
-    )
+    features = ", ".join(quote_string(c) for c in feature_cols[:10])
+    return select_sql(scored, [
+        "monotonically_increasing_id() AS id",
+        "CAST(unit_nr AS INT) AS unit_nr",
+        "CAST(time_cycles AS INT) AS cycle",
+        "CAST(dataset AS STRING) AS dataset",
+        f"{quote_string(model_name)} AS model_name",
+        "CAST(prediction AS DOUBLE) AS predicted_rul",
+        f"CAST({quote_ident(label_col)} AS DOUBLE) AS actual_rul",
+        "current_timestamp() AS prediction_date",
+        f"{quote_string(model_version)} AS model_version",
+        f"{conf} AS confidence_score",
+        f"array({features}) AS features_used",
+        "current_timestamp() AS created_at",
+    ])
 
 
 def prediction_error_summary(preds: DataFrame) -> DataFrame:

@@ -32,6 +32,7 @@ from turbine_maintenance_etl_spark.features.engine import (
 from turbine_maintenance_etl_spark.io.cmapss import read_cmapss_text
 from turbine_maintenance_etl_spark.io.sinks import write_csv, write_partitioned_parquet
 from turbine_maintenance_etl_spark.schema.cmapss import BASE_COLS, SETTING_COLS
+from turbine_maintenance_etl_spark.util import quote_ident, select_sql
 
 
 @dataclass
@@ -87,8 +88,8 @@ def run_etl(spark: SparkSession, cfg: EtlConfig, write: bool = True) -> EtlResul
     }
     kept = variable_sensor_intersection(raws)
 
-    project_cols = BASE_COLS + SETTING_COLS + kept + ["dataset"]
-    union = reduce(DataFrame.unionByName, (df.select(project_cols) for df in raws.values()))
+    project = [quote_ident(c) for c in BASE_COLS + SETTING_COLS + kept + ["dataset"]]
+    union = reduce(DataFrame.unionByName, (select_sql(df, project) for df in raws.values()))
 
     features = build_features(union, sensors=kept, windows=cfg.windows)
     units = units_summary(union)

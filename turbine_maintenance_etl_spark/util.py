@@ -5,6 +5,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def quote_ident(name: str) -> str:
+    """SQL text for a column name: backtick-quoted, embedded backticks
+    doubled, so any name (spaces, dots, backticks) parses as exactly one
+    identifier. Unlike ``llm.text.sqlref`` it never passes a string
+    through as an expression."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def quote_string(value: str) -> str:
+    """SQL text for a string literal (backslash and quote escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def select_sql(df: DataFrame, exprs: list[str]) -> DataFrame:
+    """``df.selectExpr(*exprs)`` in a fixed number of py4j round trips.
+
+    py4j ships a Python list to the JVM with one ``add`` call per
+    element; here the list travels as one NUL-joined string and is split
+    JVM-side, so a projection's construction cost does not grow with its
+    width. The analyzed plan is ``selectExpr``'s."""
+    joined = "\0".join(exprs)
+    if joined.count("\0") != len(exprs) - 1:
+        raise ValueError("select_sql: an expression contains a NUL character")
+    jvm = df.sparkSession.sparkContext._jvm  # noqa: SLF001
+    parts = jvm.java.util.regex.Pattern.compile("\0").splitAsStream(joined).toList()
+    jdf = df._jdf.selectExpr(jvm.PythonUtils.toSeq(parts))  # noqa: SLF001
+    return DataFrame(jdf, df.sparkSession)
+
+
 def ensure_parallelism(df: DataFrame, min_factor: float = 1.0) -> DataFrame:
     """Repartition up to the cluster's default parallelism when the input
     has fewer partitions.
