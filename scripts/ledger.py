@@ -9,6 +9,9 @@ Usage: python scripts/ledger.py <subcommand> ...
   time NAME [NAME ...] [--reps N]
       bench.py's protocol over an explicit entry list; one JSON line of
       medians + min/max on stdout, one progress line per entry on stderr.
+      The line's ``compiles`` map counts the generated classes Spark
+      compiled during each entry's timed runs (after its warm-up): an
+      entry whose plans outgrow Spark's codegen cache reads above 0.
       SF from $SPARK_GRAFT_SF_DIR (default: the sf0.1 corpus).
   quiet OUT.json [N_RUNS]
       run bench.py N_RUNS (default 5) times back-to-back, as separate
@@ -80,6 +83,13 @@ def warm(spark, fn, sf_dir: str) -> None:
     _materialize(fn(spark, sf_dir))
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes Spark has compiled in this JVM so far (the
+    sample count of ``CodegenMetrics``' compilation-time histogram)."""
+    source = spark.sparkContext._jvm.org.apache.spark.metrics.source  # noqa: SLF001
+    return source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def measure(spark, fn, sf_dir: str, max_runs: int = 7) -> list[float]:
     """Warm, then bench.py's timing loop; sorted run times."""
     warm(spark, fn, sf_dir)
@@ -126,12 +136,19 @@ def cmd_time(spark, a) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF)
     timings: dict[str, float] = {}
     minmax: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     for name in _check(a.names):
-        runs = measure(spark, REGISTRY[name].fn, sf_dir, a.reps)
+        fn = REGISTRY[name].fn
+        warm(spark, fn, sf_dir)
+        before = codegen_compiles(spark)
+        runs = time_entry(spark, fn, sf_dir, a.reps)
+        compiles[name] = codegen_compiles(spark) - before
         timings[name] = round(median(runs), 4)
         minmax[name] = [round(runs[0], 4), round(runs[-1], 4)]
-        print(f"{name}: median={timings[name]} minmax={minmax[name]}", file=sys.stderr)
-    print(json.dumps({"queries": timings, "queries_minmax": minmax, "sf_dir": sf_dir}))
+        print(f"{name}: median={timings[name]} minmax={minmax[name]} "
+              f"compiles={compiles[name]}", file=sys.stderr)
+    print(json.dumps({"queries": timings, "queries_minmax": minmax, "compiles": compiles,
+                      "sf_dir": sf_dir}))
 
 
 def cmd_quiet(_spark, a) -> None:

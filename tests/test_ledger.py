@@ -19,11 +19,14 @@ def test_time_prints_bench_protocol_json(spark, capsys, monkeypatch):
     ledger.main(["time", ENTRY], spark=spark)
     out, err = capsys.readouterr()
     res = json.loads(out.strip().splitlines()[-1])
-    assert set(res) == {"queries", "queries_minmax", "sf_dir"}
+    assert set(res) == {"queries", "queries_minmax", "compiles", "sf_dir"}
     assert res["sf_dir"] == SF_DIR and list(res["queries"]) == [ENTRY]
     lo, hi = res["queries_minmax"][ENTRY]
     assert 0 < lo <= res["queries"][ENTRY] <= hi
+    # a warmed entry's timed runs reuse its compiled classes
+    assert list(res["compiles"]) == [ENTRY] and res["compiles"][ENTRY] == 0
     assert f"{ENTRY}: median={res['queries'][ENTRY]} minmax=" in err
+    assert f" compiles={res['compiles'][ENTRY]}" in err
 
 
 def test_construct_prints_total_and_rows(spark, capsys):

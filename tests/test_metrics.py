@@ -6,13 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import make_cmapss_pdf
-from turbine_maintenance_etl_spark.features.engine import build_features
+from turbine_maintenance_etl_spark.features.engine import all_null_columns, build_features
 from turbine_maintenance_etl_spark.metrics.dashboard import (
     critical_share,
     fleet_overview,
     rul_distribution,
+    sensor_bounds,
     sensor_histogram,
 )
+from turbine_maintenance_etl_spark.util import quote_ident
 
 
 @pytest.fixture(scope="module")
@@ -67,3 +69,31 @@ def test_sensor_histogram_shared_bounds_single_stats_pass(features):
     plan = sensor_histogram(features, "sensor2", bins=10, bounds=bounds["sensor2"])
     s = plan._jdf.queryExecution().executedPlan().toString()
     assert s.count("HashAggregate") <= 2  # partial + final of the count
+
+
+@pytest.mark.parametrize(
+    "fn, expected",
+    [
+        (lambda df: all_null_columns(df, df.columns), ["p.q"]),
+        (
+            lambda df: sensor_bounds(df, df.columns),
+            {"x`y": (1.0, 3.0), "p.q": (None, None), "a b": (4.0, 8.0)},
+        ),
+        (
+            lambda df: {c: sorted(map(tuple, sensor_histogram(df, c, bins=2).collect()))
+                        for c in df.columns},
+            {"x`y": [(0, 1), (1, 2)], "p.q": [], "a b": [(0, 2), (1, 1)]},
+        ),
+    ],
+    ids=["all_null_columns", "sensor_bounds", "sensor_histogram"],
+)
+def test_column_names_are_quoted(spark, fn, expected):
+    """A backtick, a dot or a space in a column name is part of the name,
+    never SQL syntax or a struct-field path."""
+    names = ["x`y", "p.q", "a b"]
+    df = spark.createDataFrame(
+        [(1.0, None, 4.0), (3.0, None, 4.0), (2.0, None, 8.0)],
+        ", ".join(f"{quote_ident(c)} double" for c in names),
+    )
+    assert df.columns == names
+    assert fn(df) == expected

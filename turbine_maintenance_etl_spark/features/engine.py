@@ -90,8 +90,8 @@ def all_null_columns(df: DataFrame, candidates: list[str]) -> list[str]:
     column at once."""
     if not candidates:
         return []
-    row = df.agg(*[F.count(F.col(c)).alias(c) for c in candidates]).collect()[0]
-    return [c for c in candidates if row[c] == 0]
+    row = select_sql(df, [f"count({quote_ident(c)})" for c in candidates]).collect()[0]
+    return [c for c, n in zip(candidates, row) if n == 0]
 
 
 def variable_sensor_intersection(dfs: dict[str, DataFrame]) -> list[str]:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from turbine_maintenance_etl_spark.util import quote_ident, select_sql
+
 
 def fleet_overview(features: DataFrame) -> DataFrame:
     """Headline measures per dataset: engines, rows, avg/max RUL, avg
@@ -84,12 +86,14 @@ def sensor_bounds(features: DataFrame, cols: list[str]) -> dict[str, tuple]:
     """(min, max) for MANY sensor columns in ONE aggregation pass —
     compute this once per dashboard render (or once per session and
     cache the dict) and feed each histogram its ``bounds``, so N
-    histograms cost one stats scan instead of N."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    row = features.agg(*aggs).collect()[0]
-    return {c: (row[f"_lo_{c}"], row[f"_hi_{c}"]) for c in cols}
+    histograms cost one stats scan instead of N. The aggregate is one
+    SQL-text projection (``util.select_sql``), so building it costs the
+    same py4j round trips for any number of sensors."""
+    if not cols:
+        return {}
+    aggs = [f"{f}({quote_ident(c)})" for c in cols for f in ("min", "max")]
+    row = select_sql(features, aggs).collect()[0]
+    return {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
 
 
 def sensor_histogram(
@@ -104,15 +108,14 @@ def sensor_histogram(
     to make this a single scan; with ``bounds=None`` it falls back to
     its own bounded min/max stats fetch (one extra scan per render,
     the reference's two-pass behavior)."""
-    lo, hi = bounds if bounds is not None else features.agg(
-        F.min(col), F.max(col)
-    ).collect()[0]
+    v = F.col(quote_ident(col))
+    lo, hi = bounds if bounds is not None else features.agg(F.min(v), F.max(v)).collect()[0]
     if lo is None or hi is None:
         # empty or all-NULL column: an EMPTY histogram, not a NoneType
         # comparison crash (r10 review)
         return features.sparkSession.createDataFrame([], "bucket int, n bigint")
     width = (hi - lo) / bins if hi > lo else 1.0
-    bucket = F.least(F.floor((F.col(col) - F.lit(lo)) / F.lit(width)), F.lit(bins - 1))
+    bucket = F.least(F.floor((v - F.lit(lo)) / F.lit(width)), F.lit(bins - 1))
     return (
         features.select(bucket.cast("int").alias("bucket"))
         .groupBy("bucket")

@@ -18,6 +18,14 @@ Design notes (100 TB posture):
 - shuffle.partitions defaults to the local core count; on a real cluster
   AQE coalescing makes a too-high initial number cheap, so callers should
   raise it (e.g. 2-4x total cores) via ``shuffle_partitions``.
+- ``spark.sql.codegen.cache.maxEntries=1000``: Spark keeps compiled
+  whole-stage classes in an LRU of 100 entries by default. A turbofan
+  batch plus a dashboard round cycles through ~165 distinct classes and
+  a curation batch through ~230; an LRU smaller than a cyclically
+  accessed working set misses on nearly every lookup, so each repeated
+  batch recompiled almost all of them. The conf is static: the cache is
+  built once per JVM, so only the first ``get_spark`` in a JVM sizes
+  it. Callers can still override it through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -80,6 +88,15 @@ def get_spark(
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
         # nanos type — read as long and rebuild micros (queries._t)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Sized from the measured working sets (module docstring). Per
+        # repeated perfbench batch plus its dashboard rounds (seed 1,
+        # local[2] on 4 vCPUs), at the default 100: turbofan_batch
+        # compiled 155-159 classes, curation_corpus 229. At 1000 (>= 4x
+        # the largest working set): turbofan_batch 2-6, of which 2 in
+        # every batch come from acid.append_table (current_timestamp()
+        # folds into a per-batch literal inlined into the generated
+        # code); curation_corpus 6-8.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
