@@ -35,8 +35,6 @@ from pyspark.ml.feature import HashingTF, RegexTokenizer
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from turbine_maintenance_etl_spark.llm.text import add_quality_signals
-
 
 def weak_quality_labels(
     docs: DataFrame,
@@ -54,19 +52,22 @@ def weak_quality_labels(
     so the training set is reproducible."""
     from turbine_maintenance_etl_spark.llm.text import STOPWORDS, sqlref, tokens_sql
 
-    q = add_quality_signals(docs, text_col)
-    toks = tokens_sql(sqlref(text_col))
-    n_tok = f"nullif(cast(size({toks}) as double), 0.0D)"
+    # token array bound once per row (see text.add_quality_signals):
+    # the length test and all four per-language ratios read the one ``t``
+    n_tok = "nullif(cast(size(t) as double), 0.0D)"
     per_lang = [
-        "size(filter(" + toks + ", x -> lower(x) IN ("
+        "size(filter(t, x -> lower(x) IN ("
         + ", ".join(f"'{w}'" for w in words) + f"))) / {n_tok}"
         for words in STOPWORDS.values()
     ]
-    fluency = F.expr(f"coalesce(greatest({', '.join(per_lang)}), 0.0D)")
+    fluency = f"coalesce(greatest({', '.join(per_lang)}), 0.0D)"
     label = (
-        (F.col("n_tokens") >= min_tokens) & (fluency >= min_stopword_ratio)
-    ).cast("double")
-    return q.withColumn("label", label).select(*docs.columns, "label")
+        f"transform(array({tokens_sql(sqlref(text_col))}), t -> "
+        f"size(t) >= {min_tokens} AND {fluency} >= {float(min_stopword_ratio)!r}D)[0]"
+    )
+    return docs.withColumn("label", F.expr(f"cast({label} as double)")).select(
+        *docs.columns, "label"
+    )
 
 
 def build_quality_classifier(

@@ -21,9 +21,12 @@ Spark-first design (100 TB corpus):
   but the build side is the *model* (one row per gram), so every
   fact row matches exactly one model row — no pair explosion, and AQE
   skew-split handles oversized partitions.
-- **Everything is codegen'd expressions** (split/filter/transform/
+- **Everything is JVM-side SQL expressions** (split/filter/transform/
   explode + log arithmetic) — no Python in any row path, which keeps
   the whole operator exactly reproducible in DuckDB for the oracle.
+  The higher-order functions (filter, transform) are interpreted, not
+  codegen'd, so the token array is bound once per row (see
+  ``doc_bigrams``).
 
 Smoothing: add-k (Lidstone) over the observed vocabulary,
 ``p(w2 | w1) = (c(w1 w2) + k) / (c(w1·) + k * V)``, with unseen
@@ -79,14 +82,19 @@ def doc_bigrams(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     # ~30 py4j round-trips + a lambda bridge per call
     toks = f"concat(array('{BOS}'), {tokens_sql('lower(' + sqlref(text_col) + ')')})"
     # guard: Spark's sequence(1, 0) DESCENDS ([1, 0]) instead of being
-    # empty, so a token-less doc would index element_at(toks, 0) -> error
+    # empty, so a token-less doc would index element_at(t, 0) -> error
     starts = (
-        f"CASE WHEN size({toks}) > 1 THEN sequence(1, size({toks}) - 1) "
+        "CASE WHEN size(t) > 1 THEN sequence(1, size(t) - 1) "
         "ELSE cast(array() as array<int>) END"
     )
+    # BIND the token array once per row (text.bind_once's shape):
+    # higher-order functions are CodegenFallback, so no subexpression
+    # elimination runs inside a lambda body, and pasting the tokenizer
+    # into every size/element_at re-ran it 2n + 2 times for a doc of n
+    # tokens (3n + 2 for trigrams) — quadratic in document length.
     grams = F.expr(
-        f"transform({starts}, i -> named_struct("
-        f"'w1', element_at({toks}, i), 'w2', element_at({toks}, i + 1)))"
+        f"transform(array({toks}), t -> transform({starts}, i -> named_struct("
+        "'w1', element_at(t, i), 'w2', element_at(t, i + 1))))[0]"
     )
     return (
         ensure_parallelism(df)
@@ -283,13 +291,13 @@ def doc_trigrams(
         f"{tokens_sql('lower(' + sqlref(text_col) + ')')})"
     )
     starts = (
-        f"CASE WHEN size({toks}) > 2 THEN sequence(1, size({toks}) - 2) "
+        "CASE WHEN size(t) > 2 THEN sequence(1, size(t) - 2) "
         "ELSE cast(array() as array<int>) END"
     )
     grams = F.expr(
-        f"transform({starts}, i -> named_struct("
-        f"'w1', element_at({toks}, i), 'w2', element_at({toks}, i + 1), "
-        f"'w3', element_at({toks}, i + 2)))"
+        f"transform(array({toks}), t -> transform({starts}, i -> named_struct("
+        "'w1', element_at(t, i), 'w2', element_at(t, i + 1), "
+        "'w3', element_at(t, i + 2))))[0]"
     )
     return (
         ensure_parallelism(df)

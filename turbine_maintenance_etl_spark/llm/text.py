@@ -203,10 +203,12 @@ def fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerpri
     never md5('') — same doctrine as simhash (r10 adversarial sweep): a
     contentless doc has nothing to fingerprint, and a shared empty-hash
     would collapse every such doc into one dedup class."""
+    # token array bound once per row (see add_quality_signals)
     toks = tokens_sql(sqlref(text_col))
-    canon = "md5(concat_ws(' ', array_sort(array_distinct(" + toks + "))))"
+    canon = "md5(concat_ws(' ', array_sort(array_distinct(t))))"
     return df.withColumn(
-        out_col, F.expr(f"CASE WHEN size({toks}) > 0 THEN {canon} END")
+        out_col,
+        F.expr(f"transform(array({toks}), t -> CASE WHEN size(t) > 0 THEN {canon} END)[0]"),
     )
 
 
